@@ -51,23 +51,23 @@ def distributed_unique_ids(df: DataFrame, id_col: str = "id", offset: int = 0) -
 
 
 def keyed_unique_ids(
-    df: DataFrame, key_col: str, id_col: str = "id", offset: int = 0
+    df: DataFrame, key_cols: list[Column | str], id_col: str = "id"
 ) -> DataFrame:
     """W1 (deterministic scale strategy) — 64-bit id derived from a
-    unique natural key via ``xxhash64``: row-local (no shuffle, no
-    Window), and — unlike ``monotonically_increasing_id`` — DETERMINISTIC
-    across task retries, AQE re-plans, and independent re-executions of
-    the same lineage, so two plans that both embed this id (fact table +
-    bridge) agree without materializing the frame first.
+    unique natural key via ``xxhash64`` over ``key_cols``: row-local (no
+    shuffle, no Window), and — unlike ``monotonically_increasing_id`` —
+    DETERMINISTIC across task retries, AQE re-plans, and independent
+    re-executions of the same lineage, so two plans that both embed this
+    id (fact table + bridge) agree without materializing the frame
+    first. The id takes no offset: the hash already spans the whole
+    64-bit range, so a high-water offset would only overflow it.
 
     Uniqueness is probabilistic: for n distinct keys the collision
-    probability is ~n²/2⁶⁵ (≈0.03% at n=10⁸, ≈2.7% at n=10⁹ — per
-    product partition, not per 100 TB table, since the key embeds the
-    product-specific indicator code). Rows with *equal* keys collide by
-    construction — the key must be unique upstream."""
-    return df.withColumn(
-        id_col, (F.xxhash64(F.col(key_col)) + F.lit(offset)).cast("long")
-    )
+    probability is ~n²/2⁶⁵ (≈0.03% at n=10⁸, ≈2.7% at n=10⁹ across
+    every key hashed into one table). Rows with *equal* keys collide by
+    construction — the key must be unique upstream, across every
+    product that shares the table."""
+    return df.withColumn(id_col, F.xxhash64(*key_cols))
 
 
 def group_ordinal(

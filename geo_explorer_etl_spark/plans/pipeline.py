@@ -90,15 +90,17 @@ class Pipeline:
         # subject rows land in their subject-id partitions, so two
         # products sharing a subject overwrite the same one-row
         # partition with identical content (no duplicates), and
-        # deleting a product leaves shared parents alone.
-        self.store.replace_product("IndicatorTheme", conform(themes, "IndicatorTheme"), pid)
-        self.store.replace_product(
-            "Dimensions",
-            conform(dims.withColumnRenamed("productId", PARTITION_COL), "Dimensions"),
+        # deleting a product leaves shared parents alone. The three
+        # writes are independent, so they run concurrently.
+        self.store.replace_product_each(
             pid,
-        )
-        self.store.replace_product(
-            "DimensionValues", conform(dvals, "DimensionValues"), pid
+            {
+                "IndicatorTheme": conform(themes, "IndicatorTheme"),
+                "Dimensions": conform(
+                    dims.withColumnRenamed("productId", PARTITION_COL), "Dimensions"
+                ),
+                "DimensionValues": conform(dvals, "DimensionValues"),
+            },
         )
 
     # ------------------------------------------------------------------ E2
@@ -120,7 +122,12 @@ class Pipeline:
             # skipped at the driver (manifest listing), not post-listing
             indicators = self.store.read_product_slice("Indicators", master)
         else:
-            ref_dates = SS.build_reference_dates(self.spark, metadata.first().asDict())
+            cube_meta = metadata.first().asDict()
+            ref_dates = SS.build_reference_dates(self.spark, cube_meta)
+            # materialized once: the Indicators write, both bridges, the
+            # metadata, its unique keys and RelatedCharts all consume it,
+            # and each would otherwise re-run the member cross product,
+            # the date fan-out and the single-partition id window
             indicators = SS.build_indicators(
                 members,
                 ref_dates,
@@ -128,19 +135,14 @@ class Pipeline:
                 pid,
                 id_offset=self.store.max_id("Indicators", "IndicatorId", exclude_product=pid),
                 policy=policy,
-                release_date=metadata.first().asDict().get("releaseTime"),
-            )
+                release_date=cube_meta.get("releaseTime"),
+            ).localCheckpoint(eager=True)
 
         cube = read_cube_csv(self.spark, csv_path, dim_names)
         prepared = SS.prepare_values(cube, policy)
 
         values, orphans = SS.build_indicator_values(
-            prepared,
-            self.geo_ref,
-            self.null_reason,
-            id_offset=self.store.max_id(
-                "IndicatorValues", "IndicatorValueId", exclude_product=pid
-            ),
+            prepared, self.geo_ref, self.null_reason, product_id=pid
         )
         # bounded collect: a bad feed can orphan millions of DGUIDs —
         # never materialize more than 1000 on the driver
@@ -153,8 +155,10 @@ class Pipeline:
                 "product %s: %d orphan DGUIDs: %s", pid, orphan_count, orphan_sample[:10]
             )
 
-        # `values` feeds two writes (IndicatorValues + the bridge). Ids
-        # are deterministic (keyed_unique_ids), so this persist is a
+        # `values` feeds two staging writes that run concurrently
+        # (IndicatorValues + the bridge) and the bucketed mirror; a task
+        # needing a block another task is still caching waits for it.
+        # Ids are deterministic (keyed_unique_ids), so this persist is a
         # pure perf hint, not a correctness requirement: if a cached
         # block is evicted or an executor dies, the recomputed lineage
         # yields byte-identical rows.
@@ -179,7 +183,7 @@ class Pipeline:
         # observe() — no second execution of each plan for a count.
         from pyspark.sql import Observation
 
-        obs = {n: Observation(n) for n in ("values", "grb", "glb")}
+        obs = {n: Observation(n) for n in ("values", "grb", "glb", "indicators")}
         values_out = conform(values, "IndicatorValues").observe(
             obs["values"], F.count(F.lit(1)).alias("n")
         )
@@ -197,12 +201,16 @@ class Pipeline:
         if not policy.is_sibling:
             # keep `coordinate` alongside the declared columns: the
             # store copy must let siblings/metadata rebuild unique keys
-            frames["Indicators"] = conform(indicators, "Indicators", keep=["coordinate"])
+            frames["Indicators"] = conform(
+                indicators, "Indicators", keep=["coordinate"]
+            ).observe(obs["indicators"], F.count(F.lit(1)).alias("n"))
             # presentation tables join the same transaction — the
             # chart-config reuse (J10) legitimately reads the partition
-            # being replaced, so the metadata plan is materialized
-            # BEFORE the commit swaps it out. Dimension-sized, so the
-            # checkpoint is cheap even at 100 TB fact scale.
+            # being replaced. That needs no checkpoint: store.read()
+            # binds its file list when called, replace_product_all
+            # finishes every staging write (which runs these plans)
+            # before its publish swap, and superseded files stay on
+            # disk until vacuum().
             keys = SS.build_dimension_unique_keys(None, indicators)
             existing_meta = self.store.read("IndicatorMetaData")
             meta = SS.build_indicator_metadata(
@@ -210,7 +218,7 @@ class Pipeline:
                 keys,
                 existing_meta.drop(PARTITION_COL) if existing_meta is not None else None,
                 defaults=self.chart_defaults.for_product(pid),
-            ).localCheckpoint(eager=True)
+            )
             existing_rc = self.store.read("RelatedCharts")
             charts = SS.build_related_charts(
                 indicators,
@@ -218,7 +226,7 @@ class Pipeline:
                     existing_rc.drop(PARTITION_COL) if existing_rc is not None else None
                 ),
                 defaults=self.chart_defaults.for_product(pid),
-            ).localCheckpoint(eager=True)  # reads the partition being replaced
+            )
             frames["IndicatorMetaData"] = conform(meta, "IndicatorMetaData")
             frames["RelatedCharts"] = conform(charts, "RelatedCharts")
         # one transaction for every table of this product: all-or-
@@ -272,7 +280,10 @@ class Pipeline:
                 )
 
         return {
-            "indicators": indicators.count(),  # dimension-sized; cheap
+            # a sibling writes no Indicators: it reuses the master's slice
+            "indicators": (
+                indicators.count() if policy.is_sibling else obs["indicators"].get["n"]
+            ),
             "values": obs["values"].get["n"],
             "geo_ref_bridge": obs["grb"].get["n"],
             "geo_level_bridge": obs["glb"].get["n"],

@@ -486,6 +486,7 @@ def build_indicator_values(
     null_reason: DataFrame,
     id_offset: int = 0,
     scale_ids: bool = True,
+    product_id: int = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """J1 inner vs GeographyReference (orphans captured via anti),
     J2 left vs NullReason, W1 ids, IndicatorValueCode F6
@@ -493,7 +494,10 @@ def build_indicator_values(
 
     ``scale_ids=True`` (the default, and what the E2 pipeline uses)
     assigns IndicatorValueIds with ``keyed_unique_ids`` over the
-    IndicatorValueCode natural key: row-local (no shuffle, no Window)
+    (``product_id``, IndicatorValueCode) natural key. The product id is
+    part of the key because a merged sibling's codes carry its master's
+    product id, so master and sibling rows can share a code. The ids are
+    row-local (no shuffle, no Window)
     AND deterministic across re-executions — the bridge plan, which
     re-embeds this lineage as a second job, derives byte-identical ids
     without materializing the frame (``monotonically_increasing_id``
@@ -503,7 +507,8 @@ def build_indicator_values(
     fact ids (SURVEY.md §7); a ``row_number`` over an unpartitioned
     window funnels the whole fact table through ONE task — fatal at
     100 TB. Pass ``scale_ids=False`` only when reference-exact
-    contiguous ids are needed on a dimension-sized frame.
+    contiguous ids are needed on a dimension-sized frame; ``id_offset``
+    applies to those sequential ids only.
     """
     with_geo, orphans = J.inner_with_orphans(
         prepared.na.drop(subset=["DGUID"]),
@@ -524,7 +529,9 @@ def build_indicator_values(
     )
     if scale_ids:
         vals = W.keyed_unique_ids(
-            vals, "IndicatorValueCode", id_col="IndicatorValueId", offset=id_offset
+            vals,
+            [F.lit(product_id).cast("long"), "IndicatorValueCode"],
+            id_col="IndicatorValueId",
         )
     else:
         vals = W.sequential_ids(

@@ -17,6 +17,7 @@ partition column automatically.
 from __future__ import annotations
 
 import json
+import threading
 from contextlib import contextmanager
 from pathlib import Path
 
@@ -1383,6 +1384,8 @@ class TableStore:
         #: post-commit observers (on_commit): fired AFTER a write
         #: publishes, per mutated table — never before, never on abort
         self._commit_hooks: list = []
+        # per-thread sink for the hooks pooled work fires (_pool_map)
+        self._pooled_hooks = threading.local()
         # fail fast on a backend/layout mismatch BEFORE recover() can
         # act on (or miss) the other layout's control blobs
         self._verify_format_tag()
@@ -1436,6 +1439,10 @@ class TableStore:
         self._commit_hooks = [c for c in self._commit_hooks if c is not callback]
 
     def _fire_commit_hooks(self, table: str) -> None:
+        pooled = getattr(self._pooled_hooks, "tables", None)
+        if pooled is not None:
+            pooled.append(table)  # _pool_map fires it on the calling thread
+            return
         for cb in list(self._commit_hooks):
             try:
                 cb(table)
@@ -3031,13 +3038,25 @@ class TableStore:
         )
         self._fire_commit_hooks(table)
 
+    def replace_product_each(self, product_id: int, frames: dict[str, DataFrame]) -> None:
+        """``replace_product`` of several tables, each its own replace
+        (no cross-table atomicity: that is ``replace_product_all``). The
+        tables' writes run concurrently; their commit hooks fire on the
+        calling thread, in ``frames`` order, after every write ends."""
+        self._pool_map(
+            lambda item: self.replace_product(item[0], item[1], product_id),
+            list(frames.items()),
+        )
+
     # -- I2 at cross-table scope: atomic multi-table product replace ------
     # The reference wraps its 6-table cascading DELETE + inserts in one
     # RDBMS transaction (reference scdb.py:51–71). On a filesystem the
     # same guarantee comes from write-ahead intent + roll-forward:
     #
     #   1. STAGE   every table's new partition payload under
-    #              _staging/txn_{pid}/<table>/ (no live dir touched);
+    #              _staging/txn_{pid}/<table>/ (no live dir touched),
+    #              the tables' writes running concurrently; a failed
+    #              write discards the whole txn dir;
     #   2. INTENT  write MANIFEST.json into the txn dir via tmp+rename
     #              (the atomic commit point);
     #   3. PUBLISH swap each table's IndicatorThemeId={pid} dir for the
@@ -3089,43 +3108,48 @@ class TableStore:
             schemas: dict[str, str] = {}
             colmaps: dict[str, dict] = {}
             droppeds: dict[str, list] = {}
-            with self._inflight_keepalive(sentinel):
-                for table, df in frames.items():
-                    if PARTITION_COL in df.columns:
-                        df = df.drop(PARTITION_COL)
-                    # the frame arrives LOGICAL; the TABLE-level column
-                    # mapping must survive a single-partition replace
-                    # (other partitions' files still resolve through
-                    # it — writing this partition's files under the
-                    # logical names while the union colmap maps them
-                    # elsewhere would silently null the renamed column
-                    # here), so the shared write-side rule applies and
-                    # the mapping rides the txn manifest into the swap
-                    tdir = Path(self._path(table))
-                    cmap, dropped = (
-                        self._table_colmap(tdir) if tdir.exists() else ({}, set())
-                    )
-                    schemas[table] = df.schema.json()  # LOGICAL
-                    df, cmap = _translate_payload(df, cmap, dropped)
-                    if cmap:
-                        colmaps[table] = {k: v for k, v in cmap.items() if k != v}
-                    if dropped:
-                        droppeds[table] = sorted(dropped)
-                    # payload files exclude the partition column, exactly
-                    # like a partitioned write's IndicatorThemeId={pid} dir
-                    df.write.parquet(str(txn / table))
+            payloads: dict[str, DataFrame] = {}
+            for table, df in frames.items():
+                if PARTITION_COL in df.columns:
+                    df = df.drop(PARTITION_COL)
+                # the frame arrives LOGICAL; the TABLE-level column
+                # mapping must survive a single-partition replace
+                # (other partitions' files still resolve through
+                # it — writing this partition's files under the
+                # logical names while the union colmap maps them
+                # elsewhere would silently null the renamed column
+                # here), so the shared write-side rule applies and
+                # the mapping rides the txn manifest into the swap
+                tdir = Path(self._path(table))
+                cmap, dropped = (
+                    self._table_colmap(tdir) if tdir.exists() else ({}, set())
+                )
+                schemas[table] = df.schema.json()  # LOGICAL
+                payloads[table], cmap = _translate_payload(df, cmap, dropped)
+                if cmap:
+                    colmaps[table] = {k: v for k, v in cmap.items() if k != v}
+                if dropped:
+                    droppeds[table] = sorted(dropped)
             # constraints verify against the STAGED files — before the
             # MANIFEST commit point, so neither this publish nor a
             # crash-recovery roll-forward can ever move violating rows
-            # live; the whole txn dir is discarded on violation
+            # live; the whole txn dir is discarded on violation, and on
+            # a failed staging write
             try:
+                with self._inflight_keepalive(sentinel):
+                    # payload files exclude the partition column, exactly
+                    # like a partitioned write's IndicatorThemeId={pid} dir
+                    self._pool_map(
+                        lambda item: item[1].write.parquet(str(txn / item[0])),
+                        list(payloads.items()),
+                    )
                 for table in frames:
                     self._enforce_constraints(
                         table,
                         sorted((txn / table).glob("*.parquet")),
                         colmaps.get(table) or {},
                     )
-            except ConstraintViolation:
+            except BaseException:
                 import shutil
 
                 shutil.rmtree(txn, ignore_errors=True)
@@ -4273,7 +4297,9 @@ class TableStore:
                 merged = remaining.unionByName(incoming, allowMissingColumns=True)
             self.replace_product_all(pid, {table: merged})
 
-        self._merge_run_products(pids, run_one)
+        # each product partition is an independent CAS manifest swap;
+        # the whole-partition fallback serializes on the writer lock
+        self._pool_map(run_one, pids)
         self._fire_commit_hooks(table)
 
     def _merge_rows_file_level(
@@ -4558,8 +4584,54 @@ class TableStore:
     #: run concurrently from a small driver thread pool: Spark job
     #: submission is thread-safe, each partition's swap is its own CAS,
     #: and a many-partition predicate delete was previously serialized
-    #: on the driver loop (VERDICT r8 watch item / directive #5).
+    #: on the driver loop (VERDICT r8 watch item / directive #5). The
+    #: same width bounds every driver pool of the store (``_pool_map``).
     DELETE_PARALLELISM = 8
+
+    def _pool_map(self, fn, items: list) -> list:
+        """Run ``fn`` over ``items`` from a driver thread pool of
+        ``min(DELETE_PARALLELISM, len(items))`` threads (serially on the
+        calling thread for at most one item); results come back in
+        ``items`` order. Spark job submission is thread-safe. Once the
+        pool drains, the first failure in item order raises; calls not
+        yet started when a call fails are cancelled.
+
+        Each call runs under ``inheritable_thread_target``, so the
+        caller's job group, description and tags (and with them
+        ``cancelJobGroup``) cover the jobs the pool submits. Commit hooks
+        the calls fire are held back and fire on the calling thread, in
+        item order, after the pool drains."""
+        if len(items) <= 1:
+            return [fn(item) for item in items]
+        from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+        from pyspark import inheritable_thread_target
+
+        fired: list[list[str]] = [[] for _ in items]
+
+        def run(i: int, item):
+            self._pooled_hooks.tables = fired[i]
+            try:
+                return fn(item)
+            finally:
+                self._pooled_hooks.tables = None
+
+        with ThreadPoolExecutor(
+            max_workers=min(self.DELETE_PARALLELISM, len(items))
+        ) as pool:
+            # one wrapper per call: each copies the caller's local
+            # properties, so concurrent calls never share one mutable copy
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(run), i, item)
+                for i, item in enumerate(items)
+            ]
+            wait(futures, return_when=FIRST_EXCEPTION)
+            for f in futures:
+                f.cancel()  # no-op unless a call failed before this one started
+        for tables in fired:
+            for t in tables:
+                self._fire_commit_hooks(t)
+        return [f.result() for f in futures]
 
     # -- shared row-level DML machinery ------------------------------------
     # delete_where, update_where, and merge_rows' scattered-update path
@@ -4931,16 +5003,7 @@ class TableStore:
         # pool overlaps the round trips exactly like the DML
         # partition pool. Manifest publishes stay per-partition
         # atomic, so ordering between partitions never mattered.
-        if len(work) <= 1:
-            for item in work:
-                adopt_one(item)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(self.DELETE_PARALLELISM, len(work))
-            ) as pool:
-                list(pool.map(adopt_one, work))
+        self._pool_map(adopt_one, work)
         return len(work)
 
     # -- MERGE clause grammar ---------------------------------------------
@@ -5289,34 +5352,13 @@ class TableStore:
             finally:
                 src.unpersist()
 
-        for counts in self._merge_run_products(pids, run_one):
+        # per-product partitions merge concurrently, one CAS swap each
+        for counts in self._pool_map(run_one, pids):
             for k in totals:
                 totals[k] += counts.get(k, 0)
         if any(totals.values()):
             self._fire_commit_hooks(table)
         return totals
-
-    def _merge_run_products(self, pids: list, run_one):
-        """Thread-pool driver for per-product MERGE work (VERDICT r11
-        wrong #1): each product partition's merge is an independent
-        CAS manifest swap — exactly the delete_where/update_where
-        shape — so a wide CDC batch (or replicate_stream applying a
-        multi-product micro-batch) proceeds DELETE_PARALLELISM
-        partitions at a time instead of driver-blocking on each in
-        turn (the pooled delete runner measured 4.9× on 12 partitions
-        in r9; the pooled merge measures ~4× in SCALE.md). Spark job
-        submission is driver-thread-safe; the whole-partition fallback
-        serializes on the store writer flock, which is correct —
-        file-level merges (the hot path) never take it. Results are
-        returned in ``pids`` order."""
-        if len(pids) <= 1:
-            return [run_one(pid) for pid in pids]
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(self.DELETE_PARALLELISM, len(pids))
-        ) as pool:
-            return list(pool.map(run_one, pids))
 
     def _merge_apply_partition(
         self,
@@ -6400,14 +6442,7 @@ class TableStore:
                 "by concurrent replaces on every attempt"
             )
 
-        if len(work) <= 1:
-            return sum(run_one(item) for item in work)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(self.DELETE_PARALLELISM, len(work))
-        ) as pool:
-            return sum(pool.map(run_one, work))
+        return sum(self._pool_map(run_one, work))
 
     def delete_where(self, table: str, where, mode: str = "auto") -> int:
         """Row-level DELETE ... WHERE (the reference's IN-subquery

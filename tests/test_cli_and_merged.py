@@ -96,7 +96,6 @@ def merged_env(spark, tmp_path):
     return pipe, str(csv)
 
 
-@pytest.mark.slow
 def test_merged_sibling_reuses_master_indicators(merged_env):
     pipe, csv = merged_env
     pipe.insert_product([PID, SIBLING_PID], csv_path_for=lambda p: csv)

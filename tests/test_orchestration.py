@@ -128,7 +128,6 @@ def test_insert_then_counts(env):
     assert store.read("RelatedCharts").count() == 4
 
 
-@pytest.mark.slow
 def test_insert_guard_and_replace_idempotence(env):
     pipe, csv = env
     pipe.insert_product([PID], csv_path_for=lambda pid: csv)
@@ -139,6 +138,15 @@ def test_insert_guard_and_replace_idempotence(env):
         for t in ("Indicators", "IndicatorValues", "GeographyReferenceForIndicator",
                   "GeographicLevelForIndicator", "DimensionValues")
     }
+    # chart config edited in place: the re-append reuses it (J10) by
+    # reading the very partitions its transaction replaces
+    code = min(r["IndicatorCode"] for r in pipe.store.read("IndicatorMetaData").collect())
+    assert pipe.store.update_where(
+        "IndicatorMetaData", {"ColorTo": "'#010203'"}, [("IndicatorCode", "==", code)]
+    ) == 1
+    assert pipe.store.update_where(
+        "RelatedCharts", {"ChartTypeId": "7"}, [("IndicatorCode", "==", code)]
+    ) == 1
     # re-append = full product replace → identical table sizes (I2)
     pipe.append_product(PID, csv)
     after = {t: pipe.store.read(t).count() for t in before}
@@ -146,6 +154,97 @@ def test_insert_guard_and_replace_idempotence(env):
     # values content identical too
     v = pipe.store.read("IndicatorValues").select("IndicatorValueCode", "Value")
     assert v.distinct().count() == v.count() == 4
+    # both edits survived the replace of the partitions they live in
+    meta = {r["IndicatorCode"]: r["ColorTo"] for r in pipe.store.read("IndicatorMetaData").collect()}
+    charts = {r["IndicatorCode"]: r["ChartTypeId"] for r in pipe.store.read("RelatedCharts").collect()}
+    assert len(meta) == len(charts) == 4
+    assert meta[code] == "#010203" and charts[code] == 7
+    assert {c for c, color in meta.items() if color == "#010203"} == {code}
+    assert {c for c, chart in charts.items() if chart == 7} == {code}
+
+
+def _multi_product_env(spark, tmp_path, geos=10, sectors=10, years=(2018, 2019, 2020)):
+    """A warehouse for several products of one shape: ``geos`` ×
+    ``sectors`` × ``years`` value rows each, every product (master,
+    sibling or independent) loading the same CSV."""
+    import copy
+
+    provinces = [10, 11, 12, 13, 24, 35, 46, 47, 48, 59, 60, 61, 62]
+    dguids = [f"2016A0002{p}" for p in provinces[:geos]]
+    meta = copy.deepcopy(CUBE_METADATA_RESPONSE)
+    obj = meta[0]["object"]
+    obj["cubeStartDate"], obj["cubeEndDate"] = f"{years[0]}-01-01", f"{years[-1]}-01-01"
+    obj["subjectCode"] = ["14"]
+    obj["dimension"][0]["member"] = [
+        {"memberId": g, "memberNameEn": d, "memberNameFr": d} for g, d in enumerate(dguids, 1)
+    ]
+    obj["dimension"][1]["member"] = [
+        {"memberId": s, "memberNameEn": f"S{s}", "memberNameFr": f"S{s}", "memberUomCode": 229}
+        for s in range(1, sectors + 1)
+    ]
+
+    def fetcher(url, payload=None):
+        if "getCubeMetadata" in url:
+            body = copy.deepcopy(meta)
+            body[0]["object"]["productId"] = payload[0]["productId"]
+            return body
+        raise AssertionError(url)
+
+    lines = ["REF_DATE,DGUID,UOM,UOM_ID,VECTOR,COORDINATE,STATUS,SYMBOL,VALUE,Geography,Sector"]
+    for y in years:
+        for g, d in enumerate(dguids, 1):
+            for s in range(1, sectors + 1):
+                lines.append(f"{y},{d},Number,229,v{s},{g}.{s},,,{y + g * s}.5,{d},S{s}")
+    csv = tmp_path / "cube.csv"
+    csv.write_text("\n".join(lines) + "\n")
+    pipe = Pipeline(
+        spark=spark,
+        store=TableStore(spark, str(tmp_path / "warehouse")),
+        wds=WdsClient(spark, fetcher=fetcher),
+        registry=MergeRegistry(str(tmp_path / "merged.json")),
+        geo_ref=spark.createDataFrame(
+            [(d, d, "A0002", "POLY") for d in dguids],
+            "GeographyReferenceId string, DisplayNameShort_EN string, GeographicLevelId string, Shape string",
+        ),
+        null_reason=spark.createDataFrame([(2, "x", "s")], "NullReasonId int, Symbol string, D string"),
+        uom_codes=spark.createDataFrame(
+            [(229, "Number", "Nombre")], "memberUomCode int, memberUomEn string, memberUomFr string"
+        ),
+        subject_codes=spark.createDataFrame(
+            [("14", "Labour", "Travail")], "subjectCode string, subjectEn string, subjectFr string"
+        ),
+    )
+    return pipe, str(csv), geos * sectors * len(years)
+
+
+def test_fact_ids_unique_across_products_and_merged_pair(spark, tmp_path):
+    """Several products share IndicatorValues: an independent product,
+    then a master/sibling pair whose value codes are identical (the
+    sibling's codes carry the master's pid). Every insert succeeds, fact
+    ids are unique across products, and the geo-ref bridge links
+    exactly the fact ids."""
+    pipe, csv, per_product = _multi_product_env(spark, tmp_path)
+    single, master, sibling = 14100001, 14100002, 14100003
+    pipe.insert_product([single], csv_path_for=lambda pid: csv)
+    pipe.insert_product([master, sibling], csv_path_for=lambda pid: csv)
+
+    vals = pipe.store.read("IndicatorValues").select(PARTITION_COL, "IndicatorValueCode", "IndicatorValueId")
+    rows = vals.collect()
+    by_pid: dict[int, int] = {}
+    for r in rows:
+        by_pid[r[PARTITION_COL]] = by_pid.get(r[PARTITION_COL], 0) + 1
+    assert by_pid == {single: per_product, master: per_product, sibling: per_product}
+    fact_ids = [r["IndicatorValueId"] for r in rows]
+    assert len(set(fact_ids)) == len(fact_ids)
+    # master and sibling rows share every value code, never an id
+    codes = {pid: {r["IndicatorValueCode"] for r in rows if r[PARTITION_COL] == pid} for pid in by_pid}
+    assert codes[master] == codes[sibling]
+    bridge_ids = [
+        r["IndicatorValueId"]
+        for r in pipe.store.read("GeographyReferenceForIndicator").select("IndicatorValueId").collect()
+    ]
+    assert len(set(bridge_ids)) == len(bridge_ids)
+    assert set(bridge_ids) == set(fact_ids)
 
 
 @pytest.mark.slow

@@ -272,6 +272,106 @@ def test_snapshot_isolation_for_inflight_readers(spark, tmp_path):
     assert [r["v"] for r in store.read("IndicatorValues").limit(1).collect()] == ["new"]
 
 
+def test_replace_product_all_failed_staging_write_commits_nothing(spark, tmp_path):
+    """The tables of a replace_product_all stage concurrently; when one
+    table's write fails, the call raises once every write has stopped,
+    every table still reads its prior snapshot, no file goes live and
+    the staging dir is discarded."""
+    from pathlib import Path
+
+    from geo_explorer_etl_spark.sources.store import TableStore
+
+    root = Path(tmp_path / "store")
+    store = TableStore(spark, str(root))
+    pid = 11
+    tables = ("IndicatorValues", "GeographyReferenceForIndicator", "RelatedCharts")
+
+    def frame(tag, n=20):
+        return spark.range(n).select(F.col("id"), F.lit(tag).alias("v"))
+
+    store.replace_product_all(pid, {t: frame("old") for t in tables})
+
+    def live_files():
+        return {t: sorted(p.name for p in (root / t).rglob("*.parquet")) for t in tables}
+
+    before = live_files()
+    failing = frame("new").withColumn(
+        "v", F.when(F.col("id") == 7, F.raise_error(F.lit("staging boom"))).otherwise(F.col("v"))
+    )
+    frames = {t: frame("new") for t in tables}
+    frames["GeographyReferenceForIndicator"] = failing
+    with pytest.raises(Exception, match="staging boom"):
+        store.replace_product_all(pid, frames)
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert live_files() == before
+    for t in tables:
+        rows = store.read(t).collect()
+        assert len(rows) == 20 and {r["v"] for r in rows} == {"old"}
+    staging = root / "_staging"
+    assert not staging.exists() or not any(staging.iterdir())
+
+
+def test_pooled_partition_jobs_inherit_callers_job_group(spark, tmp_path):
+    """delete_where runs partitions from a driver thread pool; the
+    caller's job group reaches every job the pool submits, so
+    cancelJobGroup covers the whole call."""
+    from geo_explorer_etl_spark.sources.store import PARTITION_COL, TableStore
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    for pid in (1, 2):
+        store.replace_product_all(
+            pid,
+            {
+                # one file per partition that the predicate only partly
+                # matches: each partition's pass scans it with a Spark job
+                "IndicatorValues": spark.range(10).coalesce(1).select(
+                    "id", F.lit("x").alias("v"), F.lit(pid).cast("long").alias(PARTITION_COL)
+                )
+            },
+        )
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    group = f"pooled-delete-{tmp_path.name}"
+    sc.setJobGroup(group, "two-partition delete")
+    try:
+        first = int(dag.nextJobId())
+        assert store.delete_where("IndicatorValues", [("id", "<", 3)]) == 6
+        submitted = set(range(first, int(dag.nextJobId())))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert submitted
+    assert submitted <= set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_concurrent_table_writes_fire_hooks_on_calling_thread(spark, tmp_path):
+    """replace_product_each and replace_product_all write their tables
+    concurrently; the commit hooks still fire on the calling thread, in
+    table order, after the writes."""
+    import threading
+
+    from geo_explorer_etl_spark.sources.store import TableStore
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    fired = []
+    store.on_commit(lambda table: fired.append((table, threading.get_ident())))
+    tables = ["IndicatorTheme", "Dimensions", "DimensionValues"]
+    frames = {t: spark.range(3).select("id", F.lit(t).alias("v")) for t in tables}
+    me = threading.get_ident()
+
+    store.replace_product_each(5, frames)
+    assert fired == [(t, me) for t in tables]
+    assert {t: store.read(t).count() for t in tables} == {t: 3 for t in tables}
+
+    fired.clear()
+    store.replace_product_all(6, frames)
+    assert fired == [(t, me) for t in sorted(tables)]
+
+
 def test_vacuum_retention_protects_inflight_reader(spark, tmp_path):
     """The retention contract (store.vacuum): an in-flight reader's
     planned scan survives publish + vacuum as long as the vacuum's
