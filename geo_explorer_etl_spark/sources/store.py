@@ -1887,6 +1887,40 @@ class TableStore:
                 counter[0] += len(pos)
         return pos
 
+    def _local_frame(self, columns: list, schema) -> DataFrame:
+        """A small driver-built frame (``columns``: one sequence per
+        field of the ``StructType`` ``schema``) built from a pandas
+        frame, so the Arrow path plans it as a JVM ``LocalRelation``.
+        A tuple-list ``createDataFrame`` plans as a Python-RDD scan
+        (``Scan ExistingRDD``) whose every broadcast spins Python
+        workers: a measured ~0.35 s fixed tax per masked read, and
+        0.42–0.57 s against 0.26–0.33 s for a broadcast semi-join
+        against a 200-row key frame (4-vCPU local mode); the
+        LocalRelation broadcast is pure JVM. Naive ``datetime`` values of a ``timestamp`` field
+        are read as local wall-clock times — what ``collect()``
+        returns, and how the tuple-list path reads them."""
+        import numpy as np
+        import pandas as pd
+        from pyspark.sql.types import TimestampType
+
+        data = {}
+        for f, vals in zip(schema.fields, columns):
+            if isinstance(f.dataType, TimestampType):
+                vals = pd.to_datetime(
+                    [None if v is None else v.astimezone() for v in vals], utc=True
+                )
+            elif not isinstance(vals, np.ndarray):
+                # object dtype: ints with nulls stay exact (no float64)
+                vals = pd.Series(list(vals), dtype=object)
+            data[f.name] = vals
+        return self.spark.createDataFrame(pd.DataFrame(data), schema)
+
+    def _local_rows(self, rows, schema) -> DataFrame:
+        """``_local_frame`` over row tuples."""
+        return self._local_frame(
+            [[r[i] for r in rows] for i in range(len(schema.fields))], schema
+        )
+
     def _dv_probe(self, triples) -> DataFrame:
         """(partition_dir_name, file_name, position) probe frame for
         the mask join. Driver-side by construction: the write path
@@ -1894,24 +1928,11 @@ class TableStore:
         partition's total live mask (DV_PARTITION_MASK_CAP — over
         budget, dense masks demote to rewrite), so a read's probe is
         bounded by cap × touched partitions, broadcastable at any
-        table size. Built from a pandas frame so the
-        Arrow path plans it as a JVM ``LocalTableScan`` — a
-        tuple-list ``createDataFrame`` plans as a Python-RDD scan
-        (``Scan ExistingRDD``) whose broadcast spins Python workers
-        on EVERY masked read, a measured ~0.35 s fixed tax per
-        query; the LocalTableScan broadcast is pure JVM."""
+        table size (a ``_local_frame``, so the broadcast is pure
+        JVM)."""
         import numpy as np
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-        schema = "__dv_part string, __dv_name string, __dv_pos long"
-        try:
-            import pandas as pd
-        except ImportError:  # pragma: no cover - pandas is baked in
-            rows = [
-                (part, name, int(pos))
-                for part, name, arr in triples
-                for pos in arr
-            ]
-            return self.spark.createDataFrame(rows, schema)
         parts: list = []
         names: list = []
         arrays: list = []
@@ -1920,20 +1941,20 @@ class TableStore:
             parts.append(np.repeat(np.array([part], dtype=object), len(a)))
             names.append(np.repeat(np.array([name], dtype=object), len(a)))
             arrays.append(a)
-        pdf = pd.DataFrame(
-            {
-                "__dv_part": (
-                    np.concatenate(parts) if parts else np.array([], dtype=object)
-                ),
-                "__dv_name": (
-                    np.concatenate(names) if names else np.array([], dtype=object)
-                ),
-                "__dv_pos": (
-                    np.concatenate(arrays) if arrays else np.array([], dtype="int64")
-                ),
-            }
+        return self._local_frame(
+            [
+                np.concatenate(parts) if parts else np.array([], dtype=object),
+                np.concatenate(names) if names else np.array([], dtype=object),
+                np.concatenate(arrays) if arrays else np.array([], dtype="int64"),
+            ],
+            StructType(
+                [
+                    StructField("__dv_part", StringType()),
+                    StructField("__dv_name", StringType()),
+                    StructField("__dv_pos", LongType()),
+                ]
+            ),
         )
-        return self.spark.createDataFrame(pdf, schema)
 
     @staticmethod
     def _with_dv_keys(df: DataFrame) -> DataFrame:
@@ -4125,432 +4146,70 @@ class TableStore:
                         compacted += 1               # snapshot point
         return compacted
 
-    #: Max distinct values collected to the driver for candidate-file
-    #: selection — applied FIRST to the combined (pid, key...) tuple
-    #: probe (one job covering every product), and when that overflows
-    #: (e.g. many products with small per-product key sets), again PER
-    #: KEY COLUMN PER PRODUCT. Only a product whose own per-column set
-    #: exceeds the cap falls back to the whole-partition rewrite — at
-    #: that cardinality most files are candidates anyway, and an
-    #: unbounded collect would be the driver-side anti-pattern.
+    #: Max distinct (product, key...) pairs merge_apply's source-stats
+    #: job collects to the driver for candidate-file selection. Over
+    #: the cap every touched product falls back to the whole-partition
+    #: rewrite — at that cardinality most files are candidates anyway,
+    #: and an unbounded collect would be the driver-side anti-pattern.
     MERGE_KEYSET_CAP = 100_000
 
     def merge_rows(
-        self,
-        table: str,
-        df: DataFrame,
-        key_cols: list[str],
-        mode: str = "auto",
-        when_matched: list[dict] | None = None,
-        when_not_matched: list[dict] | None = None,
-        when_not_matched_by_source: list[dict] | None = None,
-    ):
-        # clause kwargs route to the full MERGE grammar (merge_apply);
-        # the bare call keeps the original upsert-by-key semantics
-        if when_matched or when_not_matched or when_not_matched_by_source:
-            return self.merge_apply(
-                table,
-                df,
-                key_cols,
-                when_matched=when_matched,
-                when_not_matched=when_not_matched,
-                when_not_matched_by_source=when_not_matched_by_source,
-                mode=mode,
-            )
-        return self._merge_rows_upsert(table, df, key_cols, mode)
-
-    def _merge_rows_upsert(
         self, table: str, df: DataFrame, key_cols: list[str], mode: str = "auto"
     ) -> None:
         """MERGE (upsert-by-key) — the table-format operation between
         append and full replace: incoming rows REPLACE current rows
         with equal ``key_cols`` and APPEND otherwise, per product
-        partition, atomically.
+        partition, atomically. This is ``merge_apply`` with the
+        replace-or-insert clause set (``WHEN MATCHED THEN UPDATE`` with
+        the whole source row, ``WHEN NOT MATCHED THEN INSERT``), so it
+        shares that engine end to end: zone-map/bloom candidate files,
+        ``mode`` (auto|cow|dv) choosing deletion vectors for sparsely
+        matched files and copy-on-write for dense ones, range-clustered
+        successor files, schema evolution (new columns null-fill old
+        rows), constraint checks, and the CAS manifest swap that
+        retries under concurrent writers.
 
-        ``mode`` picks how matched CURRENT rows are superseded, the
-        same knob (and caps) as delete_where/update_where (VERDICT r10
-        directive #2): under ``"auto"`` a candidate file whose matched
-        live rows are SPARSE takes a DELETION VECTOR masking just the
-        old row versions — the incoming batch lands as one clustered
-        insert file and NO candidate is rewritten, so a scattered
-        0.001% upsert writes kilobytes of sidecar instead of
-        rewriting every touched file; densely-matched files (or
-        ``mode="cow"``, the pre-r10 shape) are rewritten copy-on-write
-        with the incoming rows range-clustered in. Either way the scan
-        that counts matches also proves some zone-map candidates hold
-        NO matched key — those are carried by reference too.
+        One row per key: two or more incoming rows for a key that has a
+        live target row raise merge_apply's "MERGE is ambiguous"
+        ``ValueError`` and nothing is committed. Incoming rows whose
+        key has no live target row all land, duplicates included.
 
-        FILE-GRANULARITY COPY-ON-WRITE (the Delta/Iceberg MERGE
-        shape): the incoming key sets probe each live file's manifest
-        zone maps and blooms (``_file_may_match`` with per-column
-        ``in`` predicates — the same machinery predicate reads use),
-        and only files that MAY contain a matched key are rewritten
-        (anti-join out the matched keys, union the incoming rows);
-        every other file is carried into the new manifest BY
-        REFERENCE. At 100 TB this is the difference between a 0.1%
-        upsert rewriting one file and rewriting the whole product
-        partition — against a clustered layout (``compact(sort_by=
-        key)``) the zone maps bound the rewrite to the files covering
-        the touched key range; against a hash-scattered layout,
-        declared ``bloom_cols`` do. Readers keep snapshot isolation:
-        new files land under unique names BEFORE the atomic manifest
-        swap (a crash leaves orphans for fsck's GC, never a torn
-        state), and the swap ABORTS if a concurrent replace
-        superseded any rewritten source file (committing would
-        resurrect superseded rows — the same rewrite-conflict rule as
-        ``compact``); the merge then retries against the new
-        snapshot. Schema evolution applies: an incoming frame with
-        new columns unions into the declared schema (old rows
-        null-fill), and a same-name type conflict raises BEFORE
-        anything is written.
-
-        Partitions without a manifest (legacy/listing mode) and
-        incoming key sets over ``MERGE_KEYSET_CAP`` fall back to the
-        whole-partition rewrite through ``replace_product_all``'s
-        write-ahead txn — the reference's delete-then-insert bound
-        (scdb.py:32–72), kept as the conservative path."""
-        if mode not in ("auto", "cow", "dv"):
-            raise ValueError(f"merge_rows mode {mode!r} not in auto|cow|dv")
+        ``key_cols`` may include the product id. Keyed on the product id
+        ALONE, every current row of a product shares the key, so each
+        incoming product slice replaces its whole partition through
+        ``replace_product_all`` — the reference's delete-then-insert
+        (scdb.py:32–72)."""
         if PARTITION_COL not in df.columns:
             raise ValueError(f"merge_rows needs {PARTITION_COL} on the incoming frame")
-        # PARTITION_COL in key_cols is legal (the reference keys some
-        # upserts on the product id) but constant within each per-pid
-        # slice — the file-level path works on the REMAINING key
-        # columns (ADVICE r8: selecting it from the PARTITION_COL-less
-        # payload raised). An empty remainder means "replace the whole
-        # product", which IS the whole-partition fallback.
-        eff_keys = [c for c in key_cols if c != PARTITION_COL]
-        # ONE probe job for pids AND per-product key sets: distinct
-        # (pid, keys...) tuples, driver-bounded by the cap. Over the
-        # cap, a second tiny job recovers the pids and every product
-        # takes the whole-partition fallback (at that key cardinality
-        # most files are candidates anyway).
-        # ONE materialization of the upsert batch first — same rule as
-        # merge_apply: the probe plus every touched partition would
-        # otherwise re-execute the caller's source lineage. LAZY: the
-        # probe collect right below is a full shuffle aggregate over
-        # the frame, so its map stage materializes every checkpoint
-        # partition in the same job — eager=True paid one extra Spark
-        # job for nothing (r16, guide §1.2 job shape).
+        if any(c != PARTITION_COL for c in key_cols):
+            self.merge_apply(
+                table,
+                df,
+                key_cols,
+                when_matched=[{"action": "update"}],
+                when_not_matched=[{"action": "insert"}],
+                mode=mode,
+            )
+            return
+        if mode not in ("auto", "cow", "dv"):
+            raise ValueError(f"merge_rows mode {mode!r} not in auto|cow|dv")
+        # one materialization: the pid collect plus every product's
+        # write would otherwise re-execute the caller's lineage
         df = df.localCheckpoint(eager=False)
-        probe_rows = (
-            df.select(PARTITION_COL, *eff_keys)
-            .distinct()
-            .limit(self.MERGE_KEYSET_CAP + 1)
-            .collect()
-        )
-        if len(probe_rows) > self.MERGE_KEYSET_CAP:
-            pids = [r[0] for r in df.select(PARTITION_COL).distinct().collect()]
-            probe_by_pid: dict | None = None
-        else:
-            probe_by_pid = {}
-            for r in probe_rows:
-                per = probe_by_pid.setdefault(r[0], {c: set() for c in eff_keys})
-                for c in eff_keys:
-                    if r[c] is not None:
-                        per[c].add(r[c])
-            pids = sorted(probe_by_pid, key=lambda p: (p is None, p))
+        pids = [r[0] for r in df.select(PARTITION_COL).distinct().collect()]
         if any(p is None for p in pids):
             # a null product id belongs to no partition: equality can
-            # never route it (filter == NULL matches nothing), so the
-            # rows would silently vanish — refuse loudly instead
+            # never route it, so the rows would silently vanish
             raise ValueError(
                 f"merge_rows({table!r}): incoming frame has NULL "
                 f"{PARTITION_COL} rows — every row must carry a product id"
             )
-        def run_one(pid) -> None:
-            incoming = df.filter(F.col(PARTITION_COL) == pid)
-            for attempt in range(5):
-                if not eff_keys:
-                    done = False  # key = product id alone: full replace
-                    break
-                done = self._merge_rows_file_level(
-                    table,
-                    incoming,
-                    eff_keys,
-                    pid,
-                    probe_vals=(
-                        {c: sorted(v) for c, v in probe_by_pid[pid].items()}
-                        if probe_by_pid is not None
-                        else None
-                    ),
-                    mode=mode,
-                )
-                if done is not None:
-                    break
-                # swap aborted: a concurrent replace moved the
-                # snapshot under us — recompute against it
-            else:
-                raise CommitConflict(
-                    f"merge_rows({table!r}, product {pid}): rewrite "
-                    "superseded by concurrent replaces on every attempt"
-                )
-            if done:
-                return
-            # fallback: whole-partition rewrite via the cross-table txn
-            current = self.read_product_slice(table, pid)
-            if current is None:
-                merged = incoming
-            else:
-                keys = incoming.select(*key_cols).distinct()
-                remaining = current.join(keys, key_cols, "left_anti")
-                merged = remaining.unionByName(incoming, allowMissingColumns=True)
-            self.replace_product_all(pid, {table: merged})
-
-        # each product partition is an independent CAS manifest swap;
-        # the whole-partition fallback serializes on the writer lock
-        self._pool_map(run_one, pids)
-        self._fire_commit_hooks(table)
-
-    def _merge_rows_file_level(
-        self,
-        table: str,
-        incoming: DataFrame,
-        key_cols: list[str],
-        pid,
-        probe_vals: dict[str, list] | None = None,
-        mode: str = "auto",
-    ) -> bool | None:
-        """One product partition's file-granularity merge. Returns
-        True (merged), False (not applicable here — caller takes the
-        whole-partition fallback), or None (manifest swap aborted
-        under a concurrent replace — caller retries)."""
-        import uuid
-
-        part = Path(self._path(table)) / f"{PARTITION_COL}={pid}"
-        manifest = self._manifest(part)
-        if manifest is None or not manifest["files"]:
-            return False  # listing-mode or empty partition: fallback
-        if probe_vals is None:
-            # the combined all-products probe overflowed: re-probe THIS
-            # product per key column (len(key_cols) small jobs) — only
-            # a genuinely wide per-product key set forces the fallback
-            probe_vals = {}
-            for c in key_cols:
-                rows = (
-                    incoming.select(c)
-                    .filter(F.col(c).isNotNull())
-                    .distinct()
-                    .limit(self.MERGE_KEYSET_CAP + 1)
-                    .collect()
-                )
-                if len(rows) > self.MERGE_KEYSET_CAP:
-                    return False  # key set too wide: fallback
-                probe_vals[c] = [r[0] for r in rows]
-        # probe_vals: distinct NON-NULL incoming values per key column
-        # (collected once for all products by merge_rows). Null keys
-        # are excluded from the PROBE only: a current row can't
-        # anti-join-match a null key (SQL equality), so null-key
-        # incoming rows are pure appends and prune nothing. Stats are
-        # keyed by PHYSICAL column names — translate for the probe.
-        colmap = dict(manifest.get("colmap") or {})
-        dropped = set(manifest.get("dropped_physical") or [])
-        where = [(colmap.get(c, c), "in", vs) for c, vs in probe_vals.items() if vs]
-        stats = manifest.get("stats", {})
-        if any(not vs for vs in probe_vals.values()):
-            # some key column is all-null incoming: no current row can
-            # match — pure append, no candidates
-            candidates: list[str] = []
-        else:
-            candidates = [
-                n for n in manifest["files"] if _file_may_match(stats.get(n), where)
-            ]
-        payload = incoming.drop(PARTITION_COL)
-        # fresh-physical assignments for new payload columns: the same
-        # shared write-side rule as append() — here only the MAPPING is
-        # needed now (the merged frame renames to physical at write)
-        _, colmap = _translate_payload(payload, colmap, dropped)
-        # validate schema evolution BEFORE writing anything; legacy
-        # manifests (no declared schema) get one live file's footer
-        # schema as the prior — the same upgrade rule as append()
-        schema_json = manifest.get("schema")
-        prior_schema_t = (
-            _schema_from_json(schema_json)
-            if schema_json
-            else self.spark.read.parquet(str(part / manifest["files"][0])).schema
+        self._pool_map(
+            lambda pid: self.replace_product_all(
+                pid, {table: df.filter(F.col(PARTITION_COL) == pid)}
+            ),
+            sorted(pids),
         )
-        new_schema_json = _merge_schemas(prior_schema_t, payload.schema).json()
-        snapshot_dv = manifest.get("dv") or {}
-        # the key set is ≤ MERGE_KEYSET_CAP by construction (the same
-        # bound the driver collect relies on), so BROADCAST the
-        # semi/anti joins explicitly: without the hint this plans as a
-        # SortMergeJoin whose two Exchanges the trailing single-file
-        # write then executes single-task — measured 6× slower on a
-        # 1-file rewrite than the broadcast form
-        keys = F.broadcast(payload.select(*key_cols).distinct())
-        dv_updates: dict[str, dict] = {}
-        rewrite: list[str] = list(candidates)
-        full_drop: list[str] = []
-        matched = None
-        if candidates and mode != "cow":
-            # ONE counting scan decides the real per-file fate (VERDICT
-            # r10 directive #2 — shared delete/update machinery): files
-            # the zone maps flagged but that hold NO matched key are
-            # carried by reference; files whose every live row matched
-            # are dropped outright (all their rows are superseded);
-            # SPARSELY-matched files take a DELETION VECTOR masking
-            # just the old row versions — no rewrite — and only
-            # densely-matched files pay the copy-on-write.
-            _, keyed_live, dv_positions_cached, _dv = self._dml_scan_ctx(
-                part, manifest, pid
-            )
-            from pyspark import StorageLevel
-
-            matched = (
-                _rename_to_logical(keyed_live(candidates), colmap)
-                .join(keys, key_cols, "left_semi")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            live_cnt = self._dml_live_counts(
-                keyed_live, candidates, manifest.get("rows", {}), snapshot_dv
-            )
-            match_cnt, inline_pos, _ = self._dml_matched_counts(
-                matched, want_positions=True
-            )
-            full_drop, dv_files, rewrite = self._dml_dv_split(
-                candidates, match_cnt, live_cnt, snapshot_dv, mode,
-                extra_removed=set(),
-            )
-            if dv_files:
-                dv_updates = self._dml_materialize_dvs(
-                    part,
-                    lambda subset: matched.filter(
-                        F.col("__dv_name").isin(list(subset))
-                    ),
-                    dv_files,
-                    inline_pos,
-                    snapshot_dv,
-                    dv_positions_cached,
-                )
-        try:
-            if rewrite:
-                # scan under PHYSICAL names, mask the deletion vectors on
-                # the raw scan (the join keys ride _metadata, name-blind),
-                # then surface the LOGICAL names for the anti-join.
-                # merge-on-read: rows a deletion vector already masked are
-                # NOT current rows — rewriting them back in would resurrect
-                # deleted data (the rewritten files then carry no DV)
-                cur = self.spark.read.schema(
-                    _to_physical_schema(prior_schema_t, colmap)
-                ).parquet(*[str(part / n) for n in rewrite])
-                cur = self._mask_live(
-                    cur,
-                    part,
-                    {n: snapshot_dv[n] for n in rewrite if n in snapshot_dv},
-                )
-                cur = _rename_to_logical(cur, colmap)
-                remaining = cur.join(keys, key_cols, "left_anti")
-                merged = remaining.unionByName(payload, allowMissingColumns=True)
-            else:
-                merged = payload
-            # RANGE-cluster the write on the merge keys (VERDICT r8
-            # directive #3): round-robin repartition kept the file
-            # count stable but scattered every key range across every
-            # rewritten file, so REPEATED merges eroded the zone-map
-            # locality that candidate selection depends on. Range
-            # partitioning + an in-partition sort keeps each written
-            # file covering a narrow key range (tight zone maps), so
-            # MERGE is self-sustaining without a manual
-            # compact(sort_by=...). Still a real shuffle (not
-            # coalesce — which serialized the Python-backed incoming
-            # frame, measured 5× slower on a 1-file rewrite).
-            merged = merged.repartitionByRange(
-                max(1, len(rewrite)), *key_cols
-            ).sortWithinPartitions(*key_cols)
-            # files carry PHYSICAL column names; the shared staged-write
-            # helper (its coalesce is a no-op on the already
-            # range-partitioned frame) keeps ONE copy of the
-            # crash-atomic rename protocol across merge/delete/update
-            part.mkdir(parents=True, exist_ok=True)
-            new_names: list[str] = self._dml_write_files(
-                part,
-                _rename_to_physical(merged, colmap),
-                max(1, len(rewrite)),
-                "merge",
-            )
-        finally:
-            if matched is not None:
-                matched.unpersist()
-        # incoming rows can break declared constraints — enforce on
-        # this attempt's files before the swap, cleaning up like an
-        # abort on violation (delete's survivors never re-checked:
-        # every committed snapshot already conforms)
-        try:
-            self._enforce_constraints(
-                part.parent.name, [part / n for n in new_names], colmap
-            )
-        except ConstraintViolation:
-            for n in new_names:
-                (part / n).unlink(missing_ok=True)
-            for e in dv_updates.values():
-                (part / e["sidecar"]).unlink(missing_ok=True)
-            raise
-        removed = set(rewrite) | set(full_drop)
-        touched = removed | set(dv_updates)
-        snapshot_files = set(manifest["files"])
-        with self._exclusive_lock():
-
-            def swap(prior):
-                """Rewrite-conflict rules (compact's plus Iceberg's
-                MERGE validation): if any touched source is no longer
-                live — a concurrent replace superseded it — or a
-                concurrent delete moved a touched file's deletion
-                vector, the swap aborts rather than resurrect
-                superseded/deleted rows; and a concurrent APPEND's
-                files survive by reference ONLY when their
-                stats/blooms prove they hold none of the incoming
-                keys — otherwise the upsert postcondition (one row per
-                key) could break, so the swap aborts and the retry
-                recomputes candidates against the new snapshot,
-                anti-joining the appended rows too. Orphaned merge-*
-                files and sidecars age out via fsck repair's GC."""
-                if prior is None or not touched <= set(prior["files"]):
-                    return None
-                prior_dv = prior.get("dv") or {}
-                for n in touched:
-                    if (prior_dv.get(n) or {}).get("sidecar") != (
-                        snapshot_dv.get(n) or {}
-                    ).get("sidecar"):
-                        return None
-                if where:
-                    prior_stats = prior.get("stats", {})
-                    for n in prior["files"]:
-                        if n not in snapshot_files and _file_may_match(
-                            prior_stats.get(n), where
-                        ):
-                            return None  # key-overlapping concurrent append
-                keep = [n for n in prior["files"] if n not in removed]
-                prior_schema = prior.get("schema")
-                if prior_schema and prior_schema != schema_json:
-                    # schema moved under us (concurrent evolve):
-                    # re-merge against the CURRENT declared schema
-                    declared = _merge_schemas(
-                        _schema_from_json(prior_schema), payload.schema
-                    ).json()
-                else:
-                    declared = new_schema_json
-                new_dv = dict(prior_dv)
-                new_dv.update(dv_updates)
-                return self._build_manifest_body(
-                    part,
-                    sorted(new_names) + keep,
-                    prior_stats=prior.get("stats"),
-                    schema_json=declared,
-                    prior_rows=prior.get("rows"),
-                    product_seq=prior.get("product_seq"),
-                    dv=new_dv,
-                    colmap={**(prior.get("colmap") or {}), **colmap},
-                    dropped_physical=prior.get("dropped_physical"),
-                )
-
-            committed = self._update_manifest(part, swap)
-        if committed is None:
-            for n in new_names:  # this attempt's files are orphans
-                (part / n).unlink(missing_ok=True)
-            for e in dv_updates.values():
-                (part / e["sidecar"]).unlink(missing_ok=True)
-            return None
-        return True
 
     #: Deletion-vector sizing policy. ``auto`` writes a DV instead of
     #: rewriting a file when the file's matched LIVE-row fraction is
@@ -4634,11 +4293,12 @@ class TableStore:
         return [f.result() for f in futures]
 
     # -- shared row-level DML machinery ------------------------------------
-    # delete_where, update_where, and merge_rows' scattered-update path
-    # all reduce to the same shape: classify live files by whether they
-    # MAY hold matched rows, ONE scan counting matched LIVE rows per
-    # candidate file, a DV-vs-rewrite split under the mask budgets, and
-    # an atomic manifest swap that aborts under concurrent rewrites.
+    # delete_where, update_where and merge_apply (which merge_rows'
+    # upsert runs through) all reduce to the same shape: classify live
+    # files by whether they MAY hold matched rows, ONE scan counting
+    # matched LIVE rows per candidate file, a DV-vs-rewrite split under
+    # the mask budgets, and an atomic manifest swap that aborts under
+    # concurrent rewrites.
     # These helpers are that shape, factored once (VERDICT r10 #1/#2).
 
     def _dml_scan_ctx(self, part: Path, manifest: dict, pv):
@@ -4703,28 +4363,18 @@ class TableStore:
         return live_cnt
 
     def _dml_matched_counts(
-        self, matched: DataFrame, want_positions: bool,
-        clause_col: str | None = None,
-    ) -> tuple[dict[str, int], dict[str, list[int]], dict[int, int]]:
+        self, matched: DataFrame, want_positions: bool
+    ) -> tuple[dict[str, int], dict[str, list[int]]]:
         """ONE aggregation over the matched-rows frame: per-file
         counts, plus matched positions capped by a window row-number
         BEFORE the collect (the row-number sort spills to disk and the
         when(rn<=cap) keeps each aggregation buffer at most
         DV_INLINE_POSITIONS entries — a half-matched 100M-row file
-        must never buffer every position in one executor state).
-
-        ``clause_col`` (r16): additionally group by a clause-label
-        column and return per-clause row counts as the third element —
-        merge_apply's per-clause tally rides the SAME job instead of a
-        second aggregation over the cached frame (the row-number cap
-        is per ``__dv_name`` regardless, so per-file counts/positions
-        merge driver-side to exactly the ungrouped result)."""
+        must never buffer every position in one executor state)."""
         match_cnt: dict[str, int] = {}
         inline_pos_raw: dict[str, list[int]] = {}
-        clause_cnt: dict[int, int] = {}
-        keys = ["__dv_name"] + ([clause_col] if clause_col else [])
         if not want_positions:
-            agg = matched.groupBy(*keys).agg(F.count(F.lit(1)).alias("m"))
+            agg = matched.groupBy("__dv_name").agg(F.count(F.lit(1)).alias("m"))
         else:
             from pyspark.sql.window import Window
 
@@ -4741,7 +4391,7 @@ class TableStore:
             )
             agg = (
                 matched.withColumn("__rn", rn)
-                .groupBy(*keys)
+                .groupBy("__dv_name")
                 .agg(
                     F.count(F.lit(1)).alias("m"),
                     F.collect_list(
@@ -4755,9 +4405,6 @@ class TableStore:
         for r in agg.collect():
             n = r["__dv_name"]
             match_cnt[n] = match_cnt.get(n, 0) + int(r["m"])
-            if clause_col:
-                c = int(r[clause_col])
-                clause_cnt[c] = clause_cnt.get(c, 0) + int(r["m"])
             if want_positions:
                 inline_pos_raw.setdefault(n, []).extend(
                     int(x) for x in r["pos"]
@@ -4767,7 +4414,7 @@ class TableStore:
             for n, ps in inline_pos_raw.items()
             if 0 < match_cnt[n] <= self.DV_INLINE_POSITIONS
         }
-        return match_cnt, inline_pos, clause_cnt
+        return match_cnt, inline_pos
 
     def _dml_dv_split(
         self,
@@ -5007,8 +4654,9 @@ class TableStore:
         return len(work)
 
     # -- MERGE clause grammar ---------------------------------------------
-    # merge_rows is upsert-by-key only; merge_apply is the full
-    # conditional-clause MERGE (VERDICT r10 directive #2): one call,
+    # merge_apply is the one MERGE engine — merge_rows' upsert is its
+    # replace-or-insert clause set — and takes the full
+    # conditional-clause grammar (VERDICT r10 directive #2): one call,
     # one atomic manifest swap per partition, applies an op-typed
     # change batch — the standard CDC shape the reference hand-composes
     # as delete-then-append plus manual UPDATEs (scdb.py:32–72 +
@@ -5184,8 +4832,8 @@ class TableStore:
         touches — a CDC batch for product A can never scan (or delete
         from) product B. Listing-mode partitions and key sets over
         ``MERGE_KEYSET_CAP`` fall back to a whole-partition rewrite
-        through the write-ahead txn, the same conservative path as
-        ``merge_rows``. Multiple source rows matching one target key
+        through the write-ahead txn (``_merge_apply_fallback``).
+        Multiple source rows matching one target key
         raise (the ambiguous-MERGE error), except when all of them are
         pure inserts.
 
@@ -5224,9 +4872,8 @@ class TableStore:
         # ONE materialization of the source: the key probe below plus
         # every touched partition's rewrite would otherwise re-execute
         # the caller's whole source lineage (matview refresh measured
-        # a 2-row merge at 4.2 s from exactly this, r13) — the per-pid
-        # persist only caches the filtered slice, not the parent plan.
-        # Block lifetime: localCheckpoint blocks are released by the
+        # a 2-row merge at 4.2 s from exactly this, r13). Block
+        # lifetime: localCheckpoint blocks are released by the
         # ContextCleaner once this frame goes unreferenced (end of
         # this call) — the codebase-wide localCheckpoint convention;
         # there is no reliable eager-release API for checkpointed
@@ -5311,46 +4958,42 @@ class TableStore:
                 f"{PARTITION_COL} rows — every row must carry a product id"
             )
         totals = {"updated": 0, "deleted": 0, "inserted": 0, "deleted_by_source": 0}
-        from pyspark import StorageLevel
 
         def run_one(pid) -> dict:
-            src = (
-                source.filter(F.col(PARTITION_COL) == pid)
-                .drop(PARTITION_COL)
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            # no per-partition persist: the source is already
+            # materialized (the checkpoint above, or the caller's cache
+            # on the _source_stats path) and a persist of the filtered
+            # slice cost two extra jobs per call
+            src = source.filter(F.col(PARTITION_COL) == pid).drop(PARTITION_COL)
+            for attempt in range(5):
+                if overflow:
+                    counts = False  # key set too wide for file-level
+                else:
+                    counts = self._merge_apply_partition(
+                        table,
+                        src,
+                        eff_keys,
+                        wm,
+                        wnm,
+                        wbs,
+                        pid,
+                        {c: sorted(v) for c, v in probe_by_pid[pid].items()},
+                        mode,
+                        drop_cols,
+                        stats_by_pid[pid],
+                    )
+                if counts is False:
+                    return self._merge_apply_fallback(
+                        table, src, eff_keys, wm, wnm, wbs, pid, drop_cols
+                    )
+                if counts is not None:
+                    return counts
+                # None: swap aborted under a concurrent replace —
+                # recompute against the new snapshot
+            raise CommitConflict(
+                f"merge_apply({table!r}, product {pid}): rewrite "
+                "superseded by concurrent replaces on every attempt"
             )
-            try:
-                for attempt in range(5):
-                    if overflow:
-                        counts = False  # key set too wide for file-level
-                    else:
-                        counts = self._merge_apply_partition(
-                            table,
-                            src,
-                            eff_keys,
-                            wm,
-                            wnm,
-                            wbs,
-                            pid,
-                            {c: sorted(v) for c, v in probe_by_pid[pid].items()},
-                            mode,
-                            drop_cols,
-                            stats_by_pid[pid],
-                        )
-                    if counts is not None and counts is not False:
-                        return counts
-                    if counts is False:
-                        return self._merge_apply_fallback(
-                            table, src, eff_keys, wm, wnm, wbs, pid, drop_cols
-                        )
-                    # None: swap aborted under a concurrent replace —
-                    # recompute against the new snapshot
-                raise CommitConflict(
-                    f"merge_apply({table!r}, product {pid}): rewrite "
-                    "superseded by concurrent replaces on every attempt"
-                )
-            finally:
-                src.unpersist()
 
         # per-product partitions merge concurrently, one CAS swap each
         for counts in self._pool_map(run_one, pids):
@@ -5377,12 +5020,11 @@ class TableStore:
         """One partition's clause-MERGE under a single manifest swap.
         Returns a counts dict (done), False (not applicable — caller
         takes the whole-partition fallback), or None (swap aborted
-        under a concurrent writer — caller retries). Structure mirrors
-        ``_merge_rows_file_level``; the differences are the clause
-        routing (source rows label their first matching clause, target
-        rows inherit the label through a broadcast key map) and the
-        by-source delete leg (anti-join against the full source key
-        set, candidates bounded by the clause predicate's zone maps).
+        under a concurrent writer — caller retries). Source rows label
+        their first matching clause, target rows inherit the label
+        through a broadcast key map, and the by-source delete leg
+        anti-joins the full source key set over candidates bounded by
+        the clause predicate's zone maps.
 
         ``key_stats`` carries this partition's slice of merge_apply's
         global source-stats job — ``(key_tuple, mc, nmc, row_count)``
@@ -5476,7 +5118,6 @@ class TableStore:
         mc = self._clause_label(wm) if wm else F.lit(None).cast("int")
         nmc = self._clause_label(wnm) if wnm else F.lit(None).cast("int")
         src_l = src.withColumn("__mc", mc).withColumn("__nmc", nmc)
-        spark_s = src.sparkSession
         key_schema = src.select(*key_cols).schema
         key_stats = key_stats or []
         # this partition's distinct source keys, rebuilt driver-side
@@ -5493,7 +5134,7 @@ class TableStore:
                 pair_mcs[k].add(int(mc_v))
             if nmc_v is not None:
                 key_nmc.add(k)
-        all_keys = F.broadcast(spark_s.createDataFrame(keys_seen, key_schema))
+        all_keys = F.broadcast(self._local_rows(keys_seen, key_schema))
         _, keyed_live, dv_positions_cached, _dv = self._dml_scan_ctx(
             part, manifest, pid
         )
@@ -5524,7 +5165,7 @@ class TableStore:
         legs = []
         if cand_m and probe_pairs:
             pr = logical_live(cand_m).join(
-                F.broadcast(spark_s.createDataFrame(probe_pairs, pair_schema)),
+                F.broadcast(self._local_rows(probe_pairs, pair_schema)),
                 key_cols,
                 "inner",
             )
@@ -5614,14 +5255,17 @@ class TableStore:
                 f"target key {dup_key} with "
                 "update/delete clauses — MERGE is ambiguous"
             )
-        if ins_rows == 0 and not match_cnt and not clause_cnt:
+        lands = bool(ins_rows or match_cnt or clause_cnt)
+        if not lands and new_schema_json == (schema_json or prior_schema_t.json()):
             # provably NOTHING lands in this partition — no matched
             # removal (every probed key absent or fenced by a
             # target_condition, e.g. pending-window recovery re-apply),
-            # no insert, no by-source delete. Skip the write and the
-            # manifest swap entirely (r17): the old path unioned empty
-            # pieces and committed an empty file + a manifest version
-            # for a no-op.
+            # no insert, no by-source delete — and the declared schema
+            # is unchanged. Skip the write and the manifest swap
+            # entirely (r17): the old path unioned empty pieces and
+            # committed an empty file + a manifest version for a no-op.
+            # When the clauses DO evolve the schema, the swap below
+            # commits the new schema alone, with no data file.
             if probe_df is not None:
                 probe_df.unpersist()
             return {
@@ -5629,9 +5273,7 @@ class TableStore:
                 "deleted_by_source": 0,
             }
         if present_keys:
-            present = F.broadcast(
-                spark_s.createDataFrame(sorted(present_keys), key_schema)
-            )
+            present = F.broadcast(self._local_rows(sorted(present_keys), key_schema))
             src_hit = src_l.join(present, key_cols, "left_semi")
             src_unmatched = src_l.join(present, key_cols, "left_anti")
         else:
@@ -5749,7 +5391,7 @@ class TableStore:
                     else merged.unionByName(p_, allowMissingColumns=True)
                 )
             new_names: list[str] = []
-            if merged is not None:
+            if merged is not None and lands:
                 n_out = max(1, len(rewrite))
                 merged = merged.repartitionByRange(
                     n_out, *key_cols
@@ -5781,11 +5423,16 @@ class TableStore:
         with self._exclusive_lock():
 
             def swap(prior):
-                # the merge swap rules (_merge_rows_file_level): abort
-                # if a touched source was superseded or its DV moved;
-                # a concurrent append survives by reference only when
-                # its stats prove it holds no source key AND no
-                # by-source candidate row
+                # rewrite-conflict rules (compact's plus Iceberg's
+                # MERGE validation): abort if a touched source was
+                # superseded by a concurrent replace or its DV moved
+                # under a concurrent delete — committing would
+                # resurrect superseded/deleted rows. A concurrent
+                # append survives by reference only when its stats
+                # prove it holds no source key (else one row per key
+                # could break) AND no by-source candidate row; the
+                # retry recomputes against the new snapshot. Orphaned
+                # merge-* files and sidecars age out via fsck's GC.
                 if prior is None or not touched <= set(prior["files"]):
                     return None
                 prior_dv = prior.get("dv") or {}
@@ -5845,11 +5492,11 @@ class TableStore:
         drop_cols: list[str] | None = None,
     ) -> dict:
         """Whole-partition MERGE through the write-ahead txn — the
-        conservative path for listing-mode partitions and over-cap key
-        sets (the same fallback rule as ``merge_rows``). Computes the
-        final state with plain DataFrame ops and one atomic
-        ``replace_product_all``; counts come from dedicated count jobs
-        (the fallback is already the expensive path)."""
+        conservative path for listing-mode or empty partitions and
+        over-cap key sets. Computes the final state with plain
+        DataFrame ops and one atomic ``replace_product_all``; counts
+        come from dedicated count jobs (the fallback is already the
+        expensive path)."""
         from pyspark.sql import Column
 
         drops = list(drop_cols or [])
@@ -5870,6 +5517,22 @@ class TableStore:
         tkeys = current.select(*key_cols).distinct()
         src_hit = src_l.join(tkeys, key_cols, "left_semi")
         src_unmatched = src_l.join(tkeys, key_cols, "left_anti")
+        # the partition path's ambiguity rule: two source rows with a
+        # matched clause for one live target key
+        dup = (
+            src_hit.filter(F.col("__mc").isNotNull())
+            .groupBy(*key_cols)
+            .count()
+            .filter(F.col("count") > 1)
+            .limit(1)
+            .collect()
+        )
+        if dup:
+            raise ValueError(
+                f"merge_apply({table!r}): multiple source rows match "
+                f"target key {tuple(dup[0][c] for c in key_cols)} with "
+                "update/delete clauses — MERGE is ambiguous"
+            )
         removal_map = src_hit.filter(F.col("__mc").isNotNull()).select(
             *key_cols, "__mc"
         ).distinct()
@@ -5974,7 +5637,8 @@ class TableStore:
 
         Enforcement covers every path that introduces NEW row values:
         append, replace (both forms), epoch/streaming appends (incl.
-        the session-less sink), merge_rows, update_where. delete_where
+        the session-less sink), merge_apply (so merge_rows),
+        update_where. delete_where
         and compact only carry existing values, which already conform.
         ``restore`` deliberately bypasses: a pre-constraint snapshot
         was valid under its own rules — re-validate or drop the
@@ -6567,7 +6231,7 @@ class TableStore:
         match_cnt: dict[str, int] = {}
         inline_pos: dict[str, list[int]] = {}
         if candidates:
-            match_cnt, inline_pos, _ = self._dml_matched_counts(
+            match_cnt, inline_pos = self._dml_matched_counts(
                 matched_of(candidates), want_positions=(mode != "cow")
             )
         scanned_drop, dv_files, rewrite = self._dml_dv_split(
@@ -6786,7 +6450,7 @@ class TableStore:
 
             matched = matched.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            match_cnt, inline_pos, _ = self._dml_matched_counts(
+            match_cnt, inline_pos = self._dml_matched_counts(
                 matched, want_positions=(mode != "cow")
             )
             full, dv_files, rewrite = self._dml_dv_split(

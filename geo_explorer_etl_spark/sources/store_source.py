@@ -619,22 +619,26 @@ class StoreBatchDataSource(DataSource):
             import json
 
             want = list(json.loads(cols_opt))
-            have = {f.name for f in fields} | {PARTITION_COL}
-            unknown = sorted(set(want) - have)
+            by_name = {f.name: f for f in fields}
+            by_name.setdefault(
+                PARTITION_COL, T.StructField(PARTITION_COL, T.LongType(), True)
+            )
+            metadata = _flag(self.options, "metadata")
+            if metadata:
+                by_name.setdefault(
+                    FILE_COL, T.StructField(FILE_COL, T.StringType(), True)
+                )
+            unknown = sorted(set(want) - set(by_name))
             if unknown:
                 raise ValueError(
                     f"store: columns option names unknown column(s) "
-                    f"{unknown} — table {table!r} has {sorted(have)}"
+                    f"{unknown} — table {table!r} has {sorted(by_name)}"
                 )
-            keep = set(want)
-            fields = [f for f in fields if f.name in keep]
-            if PARTITION_COL in keep and PARTITION_COL not in {
-                f.name for f in fields
-            }:
-                fields.append(T.StructField(PARTITION_COL, T.LongType(), True))
-            names = {f.name for f in fields}
-            if _flag(self.options, "metadata") and FILE_COL not in names:
-                fields.append(T.StructField(FILE_COL, T.StringType(), True))
+            # served in the REQUESTED order; the provenance column the
+            # freshness sentinel filters on rides last when not asked for
+            fields = [by_name[c] for c in dict.fromkeys(want)]
+            if metadata and FILE_COL not in want:
+                fields.append(by_name[FILE_COL])
             return T.StructType(fields)
         names = {f.name for f in fields}
         if PARTITION_COL not in names:

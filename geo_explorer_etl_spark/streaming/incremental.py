@@ -190,7 +190,12 @@ def merge_sink(
     native ``format("store")`` sink cannot carry merge — its commit
     hook runs in a session-less worker and MERGE needs joins against
     the current snapshot — so merge pipelines compose here, where
-    foreachBatch has the driver session."""
+    foreachBatch has the driver session.
+
+    A batch must carry ONE row per key: two rows for a key with a live
+    target row make the merge ambiguous (``merge_rows`` raises and
+    commits nothing). Deduplicate upstream, e.g. keep each key's
+    latest event."""
 
     def apply(df: DataFrame, epoch_id: int) -> None:
         if int(epoch_id) <= int(store._epoch_ledger().get(stream_id, -1)):

@@ -176,6 +176,41 @@ def test_not_matched_by_source_delete_is_condition_bounded(spark, tmp_path):
     assert ks == list(range(15))
 
 
+def test_noop_merge_commits_evolved_schema_without_data_file(spark, tmp_path):
+    """An insert-only merge whose every key is already live lands no
+    row. Without new source columns it commits nothing; with one, the
+    clauses still evolve the declared schema, so the swap commits the
+    new schema alone — one history entry, no data file."""
+    store = _store(spark, tmp_path, n_files=2, n=10)
+    part = Path(tmp_path / "wh") / "IndicatorValues" / f"{PARTITION_COL}={PID}"
+    zeros = {"updated": 0, "deleted": 0, "inserted": 0, "deleted_by_source": 0}
+
+    def data_files():
+        return sorted(p.name for p in part.glob("*.parquet"))
+
+    files0, hist0 = data_files(), len(store.history("IndicatorValues"))
+    rows0 = sorted(store.read("IndicatorValues").select("k", "status", "amount").collect())
+    same = spark.createDataFrame(
+        [(1, "x", 9.0), (4, "y", 8.0)], "k LONG, status STRING, amount DOUBLE"
+    ).withColumn(PARTITION_COL, F.lit(PID).cast("long"))
+    assert store.merge_apply(
+        "IndicatorValues", same, ["k"], when_not_matched=[{"action": "insert"}]
+    ) == zeros
+    assert len(store.history("IndicatorValues")) == hist0
+    assert data_files() == files0
+
+    evolving = same.withColumn("extra", F.lit("e"))
+    assert store.merge_apply(
+        "IndicatorValues", evolving, ["k"], when_not_matched=[{"action": "insert"}]
+    ) == zeros
+    got = store.read("IndicatorValues")
+    assert "extra" in got.columns
+    assert len(store.history("IndicatorValues")) == hist0 + 1
+    assert data_files() == files0
+    assert sorted(got.select("k", "status", "amount").collect()) == rows0
+    assert got.filter(F.col("extra").isNotNull()).count() == 0
+
+
 def test_first_match_wins_and_ambiguity_raises(spark, tmp_path):
     store = _store(spark, tmp_path, n_files=2, n=20)
     # key 4 satisfies BOTH clause conditions -> first (delete) wins
@@ -411,7 +446,6 @@ def test_merge_apply_swap_aborts_and_retries_under_concurrent_replace(
     assert all((part / n).exists() for n in m["files"])
 
 
-@pytest.mark.slow
 def test_merge_apply_randomized_differential_vs_model(spark, tmp_path):
     """Seeded property differential: random op batches (clause-routed
     deletes, replaces, SET-updates, inserts, by-source deletes) applied

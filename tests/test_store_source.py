@@ -687,8 +687,9 @@ def test_pack_splits_rule():
 def test_projected_view_serves_only_declared_columns(spark, tmp_path):
     """r17 registration-time projection: a view registered with
     columns=[...] serves exactly those columns with values identical
-    to the full-width view, the executor read prunes the parquet I/O
-    to them, unknown columns raise, and DML freshness is unchanged."""
+    to the full-width view, in the requested order, the executor read
+    prunes the parquet I/O to them, unknown columns raise, the
+    provenance column is servable, and DML freshness is unchanged."""
     import json
 
     root = str(tmp_path / "wh")
@@ -702,7 +703,15 @@ def test_projected_view_serves_only_declared_columns(spark, tmp_path):
         spark, root, "IndicatorValues",
         columns=["IndicatorValueId", "Value"],
     )
-    assert set(both.columns) == {"IndicatorValueId", "Value"}
+    assert both.columns == ["IndicatorValueId", "Value"]
+    # served in the requested order, not the table's
+    flipped = store_table(
+        spark, root, "IndicatorValues", columns=["Value", "IndicatorValueId"]
+    )
+    assert flipped.columns == ["Value", "IndicatorValueId"]
+    assert sorted(
+        (r.IndicatorValueId, r.Value) for r in flipped.collect()
+    ) == sorted((r.IndicatorValueId, r.Value) for r in both.collect())
     full = store_table(spark, root, "IndicatorValues")
     assert sorted(
         (r.IndicatorValueId, r.Value) for r in both.collect()
@@ -713,8 +722,17 @@ def test_projected_view_serves_only_declared_columns(spark, tmp_path):
         spark, root, "IndicatorValues",
         columns=["IndicatorValueId", PARTITION_COL],
     )
-    assert set(withpid.columns) == {"IndicatorValueId", PARTITION_COL}
+    assert withpid.columns == ["IndicatorValueId", PARTITION_COL]
     assert withpid.filter(F.col(PARTITION_COL) == 2).count() == 100
+
+    # so is the provenance column, when the view keeps it
+    withfile = store_table(
+        spark, root, "IndicatorValues", keep_file_col=True,
+        columns=["IndicatorValueId", FILE_COL],
+    )
+    assert withfile.columns == ["IndicatorValueId", FILE_COL]
+    files = {r[FILE_COL] for r in withfile.collect()}
+    assert files and all(f.endswith(".parquet") for f in files)
 
     # unknown column refused loudly at registration
     with pytest.raises(Exception, match="unknown column"):
