@@ -1405,19 +1405,17 @@ def _apply_window(
         int(ent["n_partitions"]),
     ).persist()
     try:
-        # ONE probe job over the (persisted) delta groups replaces four
-        # sequential driver actions — the NULL-key refusal, the
-        # groups_touched count, the clamp totals and the touched-pid
-        # set were each their own Spark job (r16, guide §5: small jobs
-        # on the refresh path are pure scheduling overhead; this also
-        # materializes the cache the later join reads). r17: the same
-        # job ALSO collects the per-group keys (capped per pid via the
+        # ONE probe job over the (persisted) delta groups gives the
+        # NULL-key refusal, the groups_touched count, the clamp totals
+        # and the touched-pid set (four driver actions before), and
+        # materializes the cache the later join reads. The same job
+        # collects the per-group keys (capped per pid via the
         # row_number-inside-collect_list trick — collect_list skips
         # NULLs, so the aggregation buffer never holds more than
-        # CAP+1 structs per pid), which hands merge_apply its source
-        # stats and removes the merge's global stats job + source
-        # checkpoint round (guide §5; the delta_g persist already
-        # guarantees one computation of the window aggregate).
+        # CAP+1 structs per pid): they are merge_apply's source stats,
+        # so the merge needs no global stats job and no source
+        # checkpoint (the delta_g persist already guarantees one
+        # computation of the window aggregate).
         from pyspark.sql.window import Window as _W
 
         from geo_explorer_etl_spark.sources.store import TableStore as _TS
@@ -1548,12 +1546,14 @@ def _apply_window(
             store.append(t, src)
             store.adopt_manifests(t)
             return w
-        # src_stats hands merge_apply its source stats so the merge
-        # runs ZERO global jobs (r17 — the probe above collected the
-        # same rows); on the rare overflow (None) merge_apply falls
-        # back to its own stats job + source checkpoint. The src
-        # lineage reads the persisted delta_g plus the pid-pruned
-        # stored rows, so a per-partition recompute stays delta-sized.
+        # one merge_apply pass over every touched view partition: one
+        # probe job (which also checks src_stats covers the source),
+        # one write job, one manifest swap per partition. src_stats
+        # spares the merge its global stats job; on the rare overflow
+        # (None) merge_apply runs its own stats job + source
+        # checkpoint. The src lineage reads the persisted delta_g plus
+        # the pid-pruned stored rows, so the recompute stays
+        # delta-sized.
         rep = store.merge_apply(
             t,
             src,

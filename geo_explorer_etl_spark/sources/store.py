@@ -4298,8 +4298,10 @@ class TableStore:
     # files by whether they MAY hold matched rows, ONE scan counting
     # matched LIVE rows per candidate file, a DV-vs-rewrite split under
     # the mask budgets, and an atomic manifest swap that aborts under
-    # concurrent rewrites.
-    # These helpers are that shape, factored once (VERDICT r10 #1/#2).
+    # concurrent rewrites. delete_where and update_where run that shape
+    # once per partition; merge_apply runs it once for every touched
+    # partition (one probe, one write, a swap per partition).
+    # These helpers are that shape, factored once.
 
     def _dml_scan_ctx(self, part: Path, manifest: dict, pv):
         """Per-partition scan context: a reader under the declared
@@ -4656,8 +4658,8 @@ class TableStore:
     # -- MERGE clause grammar ---------------------------------------------
     # merge_apply is the one MERGE engine — merge_rows' upsert is its
     # replace-or-insert clause set — and takes the full
-    # conditional-clause grammar (VERDICT r10 directive #2): one call,
-    # one atomic manifest swap per partition, applies an op-typed
+    # conditional-clause grammar: one call, one pass over every touched
+    # partition and one atomic manifest swap per partition, applies an op-typed
     # change batch — the standard CDC shape the reference hand-composes
     # as delete-then-append plus manual UPDATEs (scdb.py:32–72 +
     # sql_scripts/Housing - Manual Updates.sql).
@@ -4757,20 +4759,6 @@ class TableStore:
         col = tc if isinstance(tc, Column) else F.expr(str(tc))
         return F.coalesce(col, F.lit(False))
 
-    @classmethod
-    def _gate_matched_leg(cls, leg: DataFrame, wm: list[dict]) -> DataFrame:
-        """Partition-path gating: drop matched TARGET rows whose clause
-        carries a target_condition they fail — they fall out of the
-        removal set entirely, so they survive the swap untouched (the
-        counts, DV positions, and rewrite survivors all derive from
-        this frame)."""
-        for i in range(len(wm)):
-            gate = cls._target_gate(wm, i)
-            if gate is None:
-                continue
-            leg = leg.filter((F.col("__mc") != i) | gate)
-        return leg
-
     @staticmethod
     def _clause_label(clauses: list[dict]):
         """First-match-wins clause index over SOURCE rows: a single
@@ -4804,23 +4792,27 @@ class TableStore:
     ) -> dict:
         """Conditional-clause MERGE (Delta's ``WHEN MATCHED [AND cond]
         THEN UPDATE/DELETE / WHEN NOT MATCHED THEN INSERT / WHEN NOT
-        MATCHED BY SOURCE THEN DELETE``) applied atomically per product
-        partition — ONE manifest swap commits every clause's effect,
-        so a reader never sees a torn intermediate (the delete landed,
-        the insert not yet). Returns
-        ``{"updated": n, "deleted": n, "inserted": n,
+        MATCHED BY SOURCE THEN DELETE``), committed by ONE manifest
+        swap per touched product partition, so a reader never sees a
+        torn intermediate (the delete landed, the insert not yet).
+        Returns ``{"updated": n, "deleted": n, "inserted": n,
         "deleted_by_source": n}``.
 
-        Execution reuses the shared row-level DML machinery end to
-        end: zone maps + blooms classify candidate files against the
-        bounded source key set (and the by-source predicate), ONE scan
-        counts matched live rows per file, sparse files take DELETION
-        VECTORS and dense files copy-on-write (``mode`` = auto|cow|dv,
-        the delete_where/update_where policy), and every superseded
-        row's successor (replacing source rows, SET-transformed target
-        rows, inserts) lands range-clustered in fresh files before the
-        swap. A scattered matched-DELETE therefore writes only
-        kilobyte sidecars — the manifest-diff pytest pins it.
+        Every touched partition goes through one pass
+        (``_merge_apply_batch``): zone maps + blooms classify each
+        partition's candidate files on the driver against the bounded
+        source key set (and the by-source predicate); ONE probe job
+        over the union of all candidate files counts matched live rows
+        per (partition, file); sparse files take DELETION VECTORS and
+        dense files copy-on-write (``mode`` = auto|cow|dv, the
+        delete_where/update_where policy, decided per partition); ONE
+        write job lands every partition's successors (replacing source
+        rows, SET-transformed target rows, inserts) range-clustered in
+        fresh files. Only the swap is per partition, each its own CAS;
+        a partition whose swap aborts under a concurrent writer drops
+        its staged files and reruns the same pass with the other
+        aborted partitions. A scattered matched-DELETE therefore writes
+        only kilobyte sidecars — the manifest-diff pytest pins it.
 
         ``drop_cols`` names ROUTING-ONLY source columns (a CDC op
         column, CDF metadata): clause conditions may reference them,
@@ -4837,7 +4829,7 @@ class TableStore:
         raise (the ambiguous-MERGE error), except when all of them are
         pure inserts.
 
-        ``_source_stats`` (r17, PRIVATE — matview refresh only): the
+        ``_source_stats`` (PRIVATE — matview refresh only): the
         caller supplies the rows the global source-stats job would
         have collected, as ``[(pid, {key_col: val}, mc, nmc, cnt),
         ...]`` where mc/nmc are the clause labels each row's first
@@ -4850,11 +4842,13 @@ class TableStore:
         identical), (b) the pair count is <= MERGE_KEYSET_CAP, and
         (c) the source frame's lineage is already cached (the global
         stats job doubles as the source materialization; skipping it
-        means each partition's write may recompute the source plan).
-        With stats supplied, merge_apply runs ZERO global jobs before
-        the per-partition work (guide §5: the matview refresh measured
-        the stats job + the checkpoint's planning round at ~0.45 s of
-        pure fixed cost on a 150-group window)."""
+        means the probe and the write may each recompute the source
+        plan). The probe job checks (a): a source row whose (pid, key)
+        the stats miss raises ``ValueError`` before anything is
+        staged. With stats supplied, merge_apply runs no global job
+        before the probe (the matview refresh measured the stats job
+        plus the checkpoint's planning round at ~0.45 s of pure fixed
+        cost on a 150-group window)."""
         if mode not in ("auto", "cow", "dv"):
             raise ValueError(f"merge_apply mode {mode!r} not in auto|cow|dv")
         if PARTITION_COL not in source.columns:
@@ -4869,15 +4863,6 @@ class TableStore:
             raise ValueError(
                 "merge_apply needs at least one non-partition key column"
             )
-        # ONE materialization of the source: the key probe below plus
-        # every touched partition's rewrite would otherwise re-execute
-        # the caller's whole source lineage (matview refresh measured
-        # a 2-row merge at 4.2 s from exactly this, r13). Block
-        # lifetime: localCheckpoint blocks are released by the
-        # ContextCleaner once this frame goes unreferenced (end of
-        # this call) — the codebase-wide localCheckpoint convention;
-        # there is no reliable eager-release API for checkpointed
-        # data from PySpark (Dataset.unpersist only covers persist())
         drop_cols = list(drop_cols or [])
         bad_drop = set(drop_cols) & set(key_cols)
         if bad_drop:
@@ -4899,20 +4884,21 @@ class TableStore:
             ]
             overflow = False
         else:
-            # LAZY checkpoint: the global stats job right below
-            # aggregates over the whole source, so its map stage
-            # materializes every checkpoint partition — fused with the
-            # probe in ONE job (r16, guide §1.2; eager=True was a
-            # separate job)
+            # ONE materialization of the source: the stats job, the
+            # probe and the write would otherwise each re-execute the
+            # caller's whole lineage (a matview refresh measured a
+            # 2-row merge at 4.2 s from exactly this). LAZY: the stats
+            # job's map stage materializes every checkpoint partition,
+            # fused into that one job; the ContextCleaner releases the
+            # blocks once this frame goes unreferenced (there is no
+            # eager-release API for checkpointed data from PySpark)
             source = source.localCheckpoint(eager=False)
-            # ONE global stats job (r16, guide §5): group the source by
-            # (pid, keys, matched-clause, not-matched-clause). From its
-            # rows the driver derives everything the old per-action
-            # subtrees computed — the key probe (zone-map candidate
-            # values + the overflow decision), and every partition's
-            # per-key clause tally (ambiguity check, insert counts,
-            # removal pairs) that previously cost one src-stats job PER
-            # partition. A (pid, key) pair carries at most ``combos``
+            # ONE global stats job: group the source by (pid, keys,
+            # matched-clause, not-matched-clause). From its rows the
+            # driver derives the key probe (zone-map candidate values +
+            # the overflow decision) and every partition's per-key
+            # clause tally (ambiguity check, insert counts, removal
+            # pairs). A (pid, key) pair carries at most ``combos``
             # label combinations, so the limit both bounds the collect
             # and proves overflow when it truncates.
             mc_g = self._clause_label(wm) if wm else F.lit(None).cast("int")
@@ -4936,549 +4922,560 @@ class TableStore:
                 len(stats_rows) > combos * self.MERGE_KEYSET_CAP
                 or n_pairs > self.MERGE_KEYSET_CAP
             )
+        stats_by_pid: dict = {}
         if overflow:
             pids = [r[0] for r in source.select(PARTITION_COL).distinct().collect()]
-            probe_by_pid: dict | None = None
-            stats_by_pid: dict | None = None
         else:
-            probe_by_pid = {}
-            stats_by_pid = {}
             for pid_v, key_t, mc_v, nmc_v, cnt in norm:
-                per = probe_by_pid.setdefault(pid_v, {c: set() for c in eff_keys})
-                for c, v in zip(eff_keys, key_t):
-                    if v is not None:
-                        per[c].add(v)
-                stats_by_pid.setdefault(pid_v, []).append(
-                    (key_t, mc_v, nmc_v, cnt)
-                )
-            pids = sorted(probe_by_pid, key=lambda p: (p is None, p))
+                stats_by_pid.setdefault(pid_v, []).append((key_t, mc_v, nmc_v, cnt))
+            pids = sorted(stats_by_pid, key=lambda p: (p is None, p))
         if any(p is None for p in pids):
             raise ValueError(
                 f"merge_apply({table!r}): source frame has NULL "
                 f"{PARTITION_COL} rows — every row must carry a product id"
             )
         totals = {"updated": 0, "deleted": 0, "inserted": 0, "deleted_by_source": 0}
-
-        def run_one(pid) -> dict:
-            # no per-partition persist: the source is already
-            # materialized (the checkpoint above, or the caller's cache
-            # on the _source_stats path) and a persist of the filtered
-            # slice cost two extra jobs per call
-            src = source.filter(F.col(PARTITION_COL) == pid).drop(PARTITION_COL)
-            for attempt in range(5):
-                if overflow:
-                    counts = False  # key set too wide for file-level
-                else:
-                    counts = self._merge_apply_partition(
-                        table,
-                        src,
-                        eff_keys,
-                        wm,
-                        wnm,
-                        wbs,
-                        pid,
-                        {c: sorted(v) for c, v in probe_by_pid[pid].items()},
-                        mode,
-                        drop_cols,
-                        stats_by_pid[pid],
-                    )
-                if counts is False:
-                    return self._merge_apply_fallback(
-                        table, src, eff_keys, wm, wnm, wbs, pid, drop_cols
-                    )
-                if counts is not None:
-                    return counts
-                # None: swap aborted under a concurrent replace —
-                # recompute against the new snapshot
+        # key set too wide for file-level: every partition falls back
+        fallback = list(pids) if overflow else []
+        pending = [] if overflow else pids
+        for attempt in range(5):
+            if not pending:
+                break
+            counts, pending, fb = self._merge_apply_batch(
+                table, source, eff_keys, wm, wnm, wbs,
+                {p: stats_by_pid[p] for p in pending}, mode, drop_cols,
+                check_stats=_source_stats is not None and attempt == 0,
+            )
+            fallback += fb
+            for k in totals:
+                totals[k] += counts[k]
+        if pending:
             raise CommitConflict(
-                f"merge_apply({table!r}, product {pid}): rewrite "
+                f"merge_apply({table!r}, products {pending}): rewrite "
                 "superseded by concurrent replaces on every attempt"
             )
-
-        # per-product partitions merge concurrently, one CAS swap each
-        for counts in self._pool_map(run_one, pids):
+        for counts in self._pool_map(
+            lambda pid: self._merge_apply_fallback(
+                table,
+                source.filter(F.col(PARTITION_COL) == pid).drop(PARTITION_COL),
+                eff_keys, wm, wnm, wbs, pid, drop_cols,
+            ),
+            fallback,
+        ):
             for k in totals:
                 totals[k] += counts.get(k, 0)
         if any(totals.values()):
             self._fire_commit_hooks(table)
         return totals
 
-    def _merge_apply_partition(
+    def _merge_apply_batch(
         self,
         table: str,
-        src: DataFrame,
+        source: DataFrame,
         key_cols: list[str],
         wm: list[dict],
         wnm: list[dict],
         wbs: list[dict],
-        pid,
-        probe_vals: dict[str, list],
+        stats_by_pid: dict,
         mode: str,
-        drop_cols: list[str] | None = None,
-        key_stats: list[tuple] | None = None,
-    ):
-        """One partition's clause-MERGE under a single manifest swap.
-        Returns a counts dict (done), False (not applicable — caller
-        takes the whole-partition fallback), or None (swap aborted
-        under a concurrent writer — caller retries). Source rows label
-        their first matching clause, target rows inherit the label
-        through a broadcast key map, and the by-source delete leg
-        anti-joins the full source key set over candidates bounded by
-        the clause predicate's zone maps.
+        drops: list[str],
+        check_stats: bool,
+    ) -> tuple[dict, list, list]:
+        """One clause-MERGE pass over the partitions ``stats_by_pid``
+        names (``{pid: [(key_tuple, mc, nmc, row_count), ...]}``, the
+        slice of merge_apply's source stats). Returns ``(counts,
+        aborted_pids, fallback_pids)``: aborted partitions lost their
+        swap to a concurrent writer and had their staged files removed
+        (the caller reruns them); fallback partitions have no manifest
+        or no files (the caller takes the whole-partition path).
 
-        ``key_stats`` carries this partition's slice of merge_apply's
-        global source-stats job — ``(key_tuple, mc, nmc, row_count)``
-        per distinct label combination — so the partition pays exactly
-        ONE read-side job: a probe over the candidate files joined to
-        the broadcast key/clause pairs that yields, per file, presence
-        (which source keys have a live target row — gated rows still
-        count), the removal counts and the capped inline DV positions
-        (r16, guide §5: presence, ambiguity, src-stats and matched
-        counts were four driver actions)."""
+        Source rows label their first matching clause and target rows
+        inherit the label through the broadcast (pid, key, clause)
+        pairs. ONE probe job over every partition's candidate files
+        yields, per (pid, file): presence (which source keys have a
+        live target row — rows failing a clause's target gate still
+        prove presence), removal counts, per-clause tallies and the
+        capped inline DV positions; the by-source delete leg (label
+        -1) anti-joins the source key set over candidates bounded by
+        the clause predicate's zone maps, and with ``check_stats`` a
+        third leg (label -2) counts source rows the stats miss. The
+        ambiguity check then falls out driver-side from the stats.
+        Partitions sharing a declared schema (normally all of them)
+        share one scan and one write job."""
+        import shutil
+        import uuid
+        from urllib.parse import unquote
+
+        from pyspark import StorageLevel
         from pyspark.sql import Column
+        from pyspark.sql.window import Window
 
-        part = Path(self._path(table)) / f"{PARTITION_COL}={pid}"
-        manifest = self._manifest(part)
-        if manifest is None or not manifest["files"]:
-            return False
-        colmap = dict(manifest.get("colmap") or {})
-        dropped = set(manifest.get("dropped_physical") or [])
-        stats = manifest.get("stats", {})
-        snapshot_dv = manifest.get("dv") or {}
-        key_where = [
-            (colmap.get(c, c), "in", vs) for c, vs in probe_vals.items() if vs
-        ]
-        all_null_key = any(not vs for vs in probe_vals.values())
-        # candidate sets: files that MAY hold a source key (the
-        # matched legs) and files that MAY hold a by-source-delete row
-        cand_m: list[str] = []
-        if not all_null_key:
-            cand_m = [
-                n
-                for n in manifest["files"]
-                if _file_may_match(stats.get(n), key_where)
-            ]
-        cand_b: list[str] = []
-        bs_pred = None
-        if wbs:
-            preds = [
-                F.coalesce(_where_expr(c["condition"]), F.lit(False))
-                if c["condition"]
-                else F.lit(True)
-                for c in wbs
-            ]
-            bs_pred = preds[0]
-            for p_ in preds[1:]:
-                bs_pred = bs_pred | p_
-            for n in manifest["files"]:
-                fs = dict(stats.get(n) or {})
-                fs_nulls = dict(fs.get("__nulls__") or {})
-                fs_nulls[PARTITION_COL] = 0
-                fs[PARTITION_COL] = [pid, pid]
-                fs["__nulls__"] = fs_nulls
-                if any(
-                    c["condition"] is None
-                    or _file_may_match(fs, _where_physical(c["condition"], colmap))
-                    for c in wbs
-                ):
-                    cand_b.append(n)
-        candidates = sorted(set(cand_m) | set(cand_b))
-        drops = list(drop_cols or [])
-        payload = src.drop(*drops) if drops else src
-        _, colmap = _translate_payload(payload, colmap, dropped)
-        schema_json = manifest.get("schema")
-        prior_schema_t = (
-            _schema_from_json(schema_json)
-            if schema_json
-            else self._footer_schema(part / manifest["files"][0])
-        )
+        def union(frames):
+            return _functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+            )
+
+        tdir = Path(self._path(table))
+        st: dict = {}
+        fallback: list = []
+        for pid in stats_by_pid:
+            part = tdir / f"{PARTITION_COL}={pid}"
+            m = self._manifest(part)
+            if m is None or not m["files"]:
+                fallback.append(pid)
+            else:
+                st[pid] = {"part": part, "m": m, "dv": m.get("dv") or {}}
+        colmap0, dropped = _union_colmap([s["m"] for s in st.values()], table)
+        payload = source.drop(PARTITION_COL, *drops)
+        _, colmap = _translate_payload(payload, colmap0, dropped)
         # only clauses that ADD source columns to the table evolve the
         # schema (replace/insert); SET-only grammars keep it unchanged
-        evolves = any(c["action"] == "update" and not c["set"] for c in wm) or bool(
-            wnm
-        )
-        new_schema_json = (
-            _merge_schemas(prior_schema_t, payload.schema).json()
-            if evolves
-            else (schema_json or prior_schema_t.json())
-        )
-        payload_types = {
-            f.name: f.dataType
-            for f in _schema_from_json(new_schema_json).fields
-            if f.name != PARTITION_COL
-        }
-        for c in wm:
-            if c["set"]:
-                unknown = sorted(set(c["set"]) - set(payload_types))
-                if unknown or PARTITION_COL in c["set"]:
+        evolves = bool(wnm) or any(c["action"] == "update" and not c["set"] for c in wm)
+        mc = self._clause_label(wm) if wm else F.lit(None).cast("int")
+        nmc = self._clause_label(wnm) if wnm else F.lit(None).cast("int")
+        src_l = source.withColumn("__mc", mc).withColumn("__nmc", nmc)
+        key_schema = src_l.select(PARTITION_COL, *key_cols).schema
+        bs_pred = _functools.reduce(lambda a, b: a | b, [
+            F.coalesce(_where_expr(c["condition"]), F.lit(False))
+            if c["condition"] else F.lit(True)
+            for c in wbs
+        ]) if wbs else None
+        # driver side: every partition's distinct source keys, its
+        # (pid, key, clause) probe pairs, candidate files and schema
+        all_keys: list[tuple] = []
+        pairs: list[tuple] = []
+        groups: dict[str, dict] = {}
+        for pid, rows in stats_by_pid.items():
+            mcs: dict = {}
+            nmc_keys: set = set()
+            for k, mc_v, nmc_v, _cnt in rows:
+                mcs.setdefault(k, set())
+                if mc_v is not None:
+                    mcs[k].add(int(mc_v))
+                if nmc_v is not None:
+                    nmc_keys.add(k)
+            for k, ms in mcs.items():
+                all_keys.append((pid, *k))
+                if ms:
+                    pairs.extend((pid, *k, m_) for m_ in sorted(ms))
+                elif k in nmc_keys:
+                    # insert-only key: presence detection still needed
+                    pairs.append((pid, *k, None))
+            s = st.get(pid)
+            if s is None:
+                continue
+            m, stats = s["m"], s["m"].get("stats", {})
+            probe_vals = {
+                c: sorted({k[i] for k in mcs if k[i] is not None})
+                for i, c in enumerate(key_cols)
+            }
+            s["key_where"] = [
+                (colmap0.get(c, c), "in", vs) for c, vs in probe_vals.items() if vs
+            ]
+            s["cand_m"] = (
+                []
+                if any(not vs for vs in probe_vals.values())
+                else [n for n in m["files"] if _file_may_match(stats.get(n), s["key_where"])]
+            )
+            s["cand_b"] = []
+            for n in m["files"] if wbs else []:
+                fs = dict(stats.get(n) or {})
+                fs["__nulls__"] = {**(fs.get("__nulls__") or {}), PARTITION_COL: 0}
+                fs[PARTITION_COL] = [pid, pid]
+                if any(
+                    c["condition"] is None
+                    or _file_may_match(fs, _where_physical(c["condition"], colmap0))
+                    for c in wbs
+                ):
+                    s["cand_b"].append(n)
+            s.update(present=set(), match={}, clause={}, inline={})
+            schema0 = m.get("schema") or self._footer_schema(
+                s["part"] / m["files"][0]
+            ).json()
+            s["schema0"] = schema0
+            groups.setdefault(schema0, {"pids": []})["pids"].append(pid)
+        for schema0, g in groups.items():
+            prior_t = _schema_from_json(schema0)
+            g["schema"] = (
+                _merge_schemas(prior_t, payload.schema).json() if evolves else schema0
+            )
+            g["types"] = types = {
+                f.name: f.dataType
+                for f in _schema_from_json(g["schema"]).fields
+                if f.name != PARTITION_COL
+            }
+            for c in wm:
+                unknown = sorted(set(c["set"] or ()) - set(types))
+                if unknown or PARTITION_COL in (c["set"] or ()):
                     raise ValueError(
                         f"merge_apply: SET column(s) {unknown or [PARTITION_COL]} "
                         f"not payload columns of {table!r}"
                     )
-        mc = self._clause_label(wm) if wm else F.lit(None).cast("int")
-        nmc = self._clause_label(wnm) if wnm else F.lit(None).cast("int")
-        src_l = src.withColumn("__mc", mc).withColumn("__nmc", nmc)
-        key_schema = src.select(*key_cols).schema
-        key_stats = key_stats or []
-        # this partition's distinct source keys, rebuilt driver-side
-        # from the global stats job — a broadcast LocalRelation, so
-        # the by-source anti-join never re-scans the cached source
-        keys_seen: list[tuple] = []
-        pair_mcs: dict[tuple, set] = {}
-        key_nmc: set = set()
-        for k, mc_v, nmc_v, _cnt in key_stats:
-            if k not in pair_mcs:
-                keys_seen.append(k)
-                pair_mcs[k] = set()
-            if mc_v is not None:
-                pair_mcs[k].add(int(mc_v))
-            if nmc_v is not None:
-                key_nmc.add(k)
-        all_keys = F.broadcast(self._local_rows(keys_seen, key_schema))
-        _, keyed_live, dv_positions_cached, _dv = self._dml_scan_ctx(
-            part, manifest, pid
+            g["reader"] = (
+                self.spark.read.schema(_to_physical_schema(prior_t, colmap0))
+                if st[g["pids"][0]]["m"].get("schema")
+                else self.spark.read
+            )
+        # the pid back from the partition dir name ("<PARTITION_COL>=<pid>")
+        pid_col = F.col("__dv_part").substr(len(PARTITION_COL) + 2, 1 << 16).cast(
+            key_schema[PARTITION_COL].dataType
         )
 
-        def logical_live(subset: list[str]) -> DataFrame:
-            return _rename_to_logical(keyed_live(subset), colmap)
-
-        # ONE read-side probe job (r16, guide §5): candidate files
-        # joined to the broadcast (key, clause) pairs yield presence
-        # (which source keys have a live target row — rows failing a
-        # clause's target gate still prove presence), per-file removal
-        # counts, per-clause tallies and the capped inline positions,
-        # all in one aggregation; the by-source delete leg rides the
-        # same job as label -1. The ambiguity check (two source rows
-        # updating/deleting one PRESENT target key) then falls out
-        # driver-side from the global key_stats.
-        pair_schema = src_l.select(*key_cols, "__mc").schema
-        probe_pairs: list[tuple] = []
-        for k in keys_seen:
-            if pair_mcs[k]:
-                probe_pairs.extend((*k, m) for m in sorted(pair_mcs[k]))
-            elif k in key_nmc:
-                # insert-only key: presence detection still needed
-                probe_pairs.append((*k, None))
-        from pyspark import StorageLevel
-
-        probe_df = None
-        legs = []
-        if cand_m and probe_pairs:
-            pr = logical_live(cand_m).join(
-                F.broadcast(self._local_rows(probe_pairs, pair_schema)),
-                key_cols,
-                "inner",
+        def live(reader, files: dict) -> DataFrame:
+            """Live rows (existing deletion vectors applied) of
+            ``{pid: [file names]}`` under one group's reader, with
+            (file, position) keys and the pid, in logical names."""
+            paths, masked = [], []
+            for pid, names in files.items():
+                part, dv = st[pid]["part"], st[pid]["dv"]
+                for n in names:
+                    paths.append(str(part / n))
+                    if n in dv:
+                        masked.append((part.name, n, self._dv_positions(part, dv[n])))
+            k = self._with_dv_keys(reader.parquet(*paths)).withColumn(
+                PARTITION_COL, pid_col
             )
-            rm = F.col("__mc").isNotNull()
-            for i in range(len(wm)):
-                gate = self._target_gate(wm, i)
-                if gate is not None:
-                    rm = rm & ((F.col("__mc") != i) | gate)
-            legs.append(pr.withColumn("__rm", rm))
-        if wbs and cand_b:
-            legs.append(
-                logical_live(cand_b)
-                .filter(bs_pred)
-                .join(all_keys, key_cols, "left_anti")
-                .withColumn("__mc", F.lit(-1))
-                .withColumn("__rm", F.lit(True))
-            )
-        if legs:
-            probe_df = legs[0]
-            for l_ in legs[1:]:
-                probe_df = probe_df.unionByName(l_, allowMissingColumns=True)
-            # the probe aggregation below materializes this cache, so
-            # the write job (survivors anti-join, SET transforms, the
-            # gated-replace broadcast) and any dense-DV second pass
-            # read the joined rows instead of re-scanning candidates
-            probe_df = probe_df.persist(StorageLevel.MEMORY_AND_DISK)
-        present_keys: set = set()
-        match_cnt: dict[str, int] = {}
-        clause_cnt: dict[int, int] = {}
-        inline_raw: dict[str, list[int]] = {}
-        if probe_df is not None:
-            from pyspark.sql.window import Window
-
-            # one shuffle by construction: the window's (file, rm)
-            # partitioning satisfies the aggregate's clustered
-            # distribution (subset of its grouping keys) — see the
-            # _dml_matched_counts note (r17, measured)
-            rn = F.row_number().over(
-                Window.partitionBy("__dv_name", "__rm").orderBy("__dv_pos")
-            )
-            for r in (
-                probe_df.select(
-                    "__dv_name", "__dv_pos", *key_cols, "__mc", "__rm"
-                )
-                .withColumn("__rn", rn)
-                .groupBy("__dv_name", *key_cols, "__mc", "__rm")
-                .agg(
-                    F.count(F.lit(1)).alias("m"),
-                    F.collect_list(
-                        F.when(
-                            F.col("__rm")
-                            & (F.col("__rn") <= self.DV_INLINE_POSITIONS),
-                            F.col("__dv_pos"),
-                        )
-                    ).alias("pos"),
-                )
-                .collect()
-            ):
-                if r["__mc"] is None or r["__mc"] != -1:
-                    present_keys.add(tuple(r[c] for c in key_cols))
-                if r["__rm"]:
-                    n = r["__dv_name"]
-                    match_cnt[n] = match_cnt.get(n, 0) + int(r["m"])
-                    c_ = int(r["__mc"])
-                    clause_cnt[c_] = clause_cnt.get(c_, 0) + int(r["m"])
-                    inline_raw.setdefault(n, []).extend(
-                        int(x) for x in r["pos"]
-                    )
-        inline_pos = {
-            n: sorted(ps)
-            for n, ps in inline_raw.items()
-            if 0 < match_cnt[n] <= self.DV_INLINE_POSITIONS
-        }
-        ins_rows = 0
-        per_key: dict = {}
-        for k, mc_v, nmc_v, cnt in key_stats:
-            if k in present_keys:
-                if mc_v is not None:
-                    per_key[k] = per_key.get(k, 0) + cnt
-            elif nmc_v is not None:
-                ins_rows += cnt
-        dup_key = next((k for k, n in per_key.items() if n > 1), None)
-        if dup_key is not None:
-            probe_df.unpersist()
-            raise ValueError(
-                f"merge_apply({table!r}): multiple source rows match "
-                f"target key {dup_key} with "
-                "update/delete clauses — MERGE is ambiguous"
-            )
-        lands = bool(ins_rows or match_cnt or clause_cnt)
-        if not lands and new_schema_json == (schema_json or prior_schema_t.json()):
-            # provably NOTHING lands in this partition — no matched
-            # removal (every probed key absent or fenced by a
-            # target_condition, e.g. pending-window recovery re-apply),
-            # no insert, no by-source delete — and the declared schema
-            # is unchanged. Skip the write and the manifest swap
-            # entirely (r17): the old path unioned empty pieces and
-            # committed an empty file + a manifest version for a no-op.
-            # When the clauses DO evolve the schema, the swap below
-            # commits the new schema alone, with no data file.
-            if probe_df is not None:
-                probe_df.unpersist()
-            return {
-                "updated": 0, "deleted": 0, "inserted": 0,
-                "deleted_by_source": 0,
-            }
-        if present_keys:
-            present = F.broadcast(self._local_rows(sorted(present_keys), key_schema))
-            src_hit = src_l.join(present, key_cols, "left_semi")
-            src_unmatched = src_l.join(present, key_cols, "left_anti")
-        else:
-            src_unmatched = src_l
-        # the removal set: matched targets labeled by clause (rows a
-        # target gate fenced out already carry __rm = false), plus the
-        # by-source leg labeled -1 — a filter over the cached probe
-        matched = (
-            probe_df.filter("__rm").drop("__rm")
-            if probe_df is not None and (match_cnt or clause_cnt)
-            else None
-        )
-        counts = {"updated": 0, "deleted": 0, "inserted": 0, "deleted_by_source": 0}
-        dv_updates: dict[str, dict] = {}
-        full_drop: list[str] = []
-        rewrite: list[str] = []
-        try:
-            if matched is not None:
-                live_cnt = self._dml_live_counts(
-                    keyed_live, candidates, manifest.get("rows", {}), snapshot_dv
-                )
-                full_drop, dv_files, rewrite = self._dml_dv_split(
-                    candidates, match_cnt, live_cnt, snapshot_dv, mode,
-                    extra_removed=set(),
-                )
-                if dv_files:
-                    dv_updates = self._dml_materialize_dvs(
-                        part,
-                        lambda subset: matched.filter(
-                            F.col("__dv_name").isin(list(subset))
-                        ),
-                        dv_files,
-                        inline_pos,
-                        snapshot_dv,
-                        dv_positions_cached,
-                    )
-            # successors: every superseded row's replacement plus the
-            # not-matched inserts, range-clustered into fresh files
-            pieces = []
-            replace_idx = [
-                i for i, c in enumerate(wm) if c["action"] == "update" and not c["set"]
-            ]
-            if replace_idx and present_keys:
-                # a replace clause with a target gate lands its source
-                # successor ONLY for keys with a passing target row —
-                # otherwise a fenced-out (stale) update would still
-                # swap its payload in. passed is distinct (key, clause)
-                # out of the broadcast-bounded removal set.
-                gated_idx = [
-                    i for i in replace_idx
-                    if wm[i].get("target_condition") is not None
-                ]
-                plain_idx = [i for i in replace_idx if i not in gated_idx]
-                rep_src = src_hit.filter(F.col("__mc").isin(plain_idx)) \
-                    if plain_idx else None
-                if gated_idx and matched is not None:
-                    passed = F.broadcast(
-                        matched.filter(F.col("__mc").isin(gated_idx))
-                        .select(*key_cols, "__mc")
-                        .distinct()
-                    )
-                    gated_src = src_hit.filter(
-                        F.col("__mc").isin(gated_idx)
-                    ).join(passed, [*key_cols, "__mc"], "left_semi")
-                    rep_src = (
-                        gated_src
-                        if rep_src is None
-                        else rep_src.unionByName(gated_src)
-                    )
-                if rep_src is not None:
-                    pieces.append(rep_src.drop("__mc", "__nmc", *drops))
-            if matched is not None:
-                for i, c in enumerate(wm):
-                    if c["action"] == "update" and c["set"]:
-                        t = matched.filter(F.col("__mc") == i).drop(
-                            "__dv_part", "__dv_name", "__dv_pos",
-                            PARTITION_COL, "__mc",
-                        )
-                        pieces.append(
-                            t.withColumns(
-                                {
-                                    col: (
-                                        e
-                                        if isinstance(e, Column)
-                                        else F.expr(str(e))
-                                    ).cast(payload_types[col])
-                                    for col, e in c["set"].items()
-                                }
-                            )
-                        )
-            if wnm:
-                ins = src_unmatched.filter(F.col("__nmc").isNotNull()).drop(
-                    "__mc", "__nmc", *drops
-                )
-                pieces.append(ins)
-                # inserted rows were already tallied driver-side by the
-                # src-stats job (keys outside the present set with a
-                # not-matched clause) — no count() action here. An
-                # Observation riding the write was tried and REVERTED:
-                # repartitionByRange samples its child to fit range
-                # boundaries, so CollectMetrics below it fires twice.
-                counts["inserted"] = ins_rows
-            survivors = None
-            if rewrite:
-                survivors = logical_live(rewrite).join(
-                    matched.select("__dv_name", "__dv_pos"),
-                    ["__dv_name", "__dv_pos"],
+            if masked:
+                k = k.join(
+                    F.broadcast(self._dv_probe(masked)),
+                    ["__dv_part", "__dv_name", "__dv_pos"],
                     "left_anti",
-                ).drop("__dv_part", "__dv_name", "__dv_pos", PARTITION_COL)
-            merged = survivors
-            for p_ in pieces:
-                merged = (
-                    p_
-                    if merged is None
-                    else merged.unionByName(p_, allowMissingColumns=True)
                 )
-            new_names: list[str] = []
-            if merged is not None and lands:
-                n_out = max(1, len(rewrite))
-                merged = merged.repartitionByRange(
-                    n_out, *key_cols
-                ).sortWithinPartitions(*key_cols)
-                part.mkdir(parents=True, exist_ok=True)
-                new_names = self._dml_write_files(
-                    part, _rename_to_physical(merged, colmap), n_out, "merge"
+            return _rename_to_logical(k, colmap)
+
+        pk = [PARTITION_COL, *key_cols]
+        pairs_df = F.broadcast(self._local_rows(pairs, src_l.select(*pk, "__mc").schema))
+        keys_df = F.broadcast(self._local_rows(all_keys, key_schema))
+        rm = F.col("__mc").isNotNull()
+        for i in range(len(wm)):
+            gate = self._target_gate(wm, i)
+            if gate is not None:
+                rm = rm & ((F.col("__mc") != i) | gate)
+        narrow_cols = [PARTITION_COL, "__dv_name", "__dv_pos", *key_cols, "__mc", "__rm"]
+        narrow = []
+        for g in groups.values():
+            legs = []
+            cm = {p: st[p]["cand_m"] for p in g["pids"] if st[p]["cand_m"]}
+            if cm and pairs:
+                legs.append(
+                    live(g["reader"], cm).join(pairs_df, pk).withColumn("__rm", rm)
                 )
-        finally:
-            if probe_df is not None:
-                probe_df.unpersist()
-        for i, c in enumerate(wm):
-            n = clause_cnt.get(i, 0)
-            counts["updated" if c["action"] == "update" else "deleted"] += n
-        counts["deleted_by_source"] = clause_cnt.get(-1, 0)
-        try:
-            self._enforce_constraints(
-                part.parent.name, [part / n for n in new_names], colmap
+            cb = {p: st[p]["cand_b"] for p in g["pids"] if st[p]["cand_b"]}
+            if cb:
+                legs.append(
+                    live(g["reader"], cb)
+                    .filter(bs_pred)
+                    .join(keys_df, pk, "left_anti")
+                    .withColumn("__mc", F.lit(-1))
+                    .withColumn("__rm", F.lit(True))
+                )
+            if legs:
+                # the probe aggregation below materializes this cache,
+                # so the write job (survivors anti-join, SET transforms,
+                # the gated-replace broadcast) and any dense-DV second
+                # pass read the joined rows instead of re-scanning
+                g["probe"] = union(legs).persist(StorageLevel.MEMORY_AND_DISK)
+                narrow.append(g["probe"].select(*narrow_cols))
+        if check_stats:
+            s_, k_ = source.select(*pk).alias("__s"), keys_df.alias("__k")
+            cond = _functools.reduce(
+                lambda a, b: a & b,
+                [F.col(f"__s.{c}").eqNullSafe(F.col(f"__k.{c}")) for c in pk],
             )
-        except ConstraintViolation:
-            for n in new_names:
-                (part / n).unlink(missing_ok=True)
-            for e in dv_updates.values():
-                (part / e["sidecar"]).unlink(missing_ok=True)
-            raise
-        removed = set(rewrite) | set(full_drop)
-        touched = removed | set(dv_updates)
-        snapshot_files = set(manifest["files"])
-        with self._exclusive_lock():
-
-            def swap(prior):
-                # rewrite-conflict rules (compact's plus Iceberg's
-                # MERGE validation): abort if a touched source was
-                # superseded by a concurrent replace or its DV moved
-                # under a concurrent delete — committing would
-                # resurrect superseded/deleted rows. A concurrent
-                # append survives by reference only when its stats
-                # prove it holds no source key (else one row per key
-                # could break) AND no by-source candidate row; the
-                # retry recomputes against the new snapshot. Orphaned
-                # merge-* files and sidecars age out via fsck's GC.
-                if prior is None or not touched <= set(prior["files"]):
-                    return None
-                prior_dv = prior.get("dv") or {}
-                for n in touched:
-                    if (prior_dv.get(n) or {}).get("sidecar") != (
-                        snapshot_dv.get(n) or {}
-                    ).get("sidecar"):
-                        return None
-                prior_stats = prior.get("stats", {})
-                for n in prior["files"]:
-                    if n in snapshot_files:
-                        continue
-                    if key_where and _file_may_match(prior_stats.get(n), key_where):
-                        return None
-                    if wbs:
-                        return None  # any unseen append may hold by-source rows
-                keep = [n for n in prior["files"] if n not in removed]
-                prior_schema = prior.get("schema")
-                if prior_schema and prior_schema != new_schema_json and evolves:
-                    declared = _merge_schemas(
-                        _schema_from_json(prior_schema), payload.schema
-                    ).json()
-                else:
-                    declared = new_schema_json if evolves else (prior_schema or new_schema_json)
-                new_dv = dict(prior_dv)
-                new_dv.update(dv_updates)
-                return self._build_manifest_body(
-                    part,
-                    sorted(new_names) + keep,
-                    prior_stats=prior.get("stats"),
-                    schema_json=declared,
-                    prior_rows=prior.get("rows"),
-                    product_seq=prior.get("product_seq"),
-                    dv=new_dv,
-                    colmap={**(prior.get("colmap") or {}), **colmap},
-                    dropped_physical=prior.get("dropped_physical"),
+            narrow.append(
+                s_.join(k_, cond, "left_anti").select(
+                    *[F.col(c) for c in pk],
+                    F.lit(None).cast("string").alias("__dv_name"),
+                    F.lit(None).cast("long").alias("__dv_pos"),
+                    F.lit(-2).alias("__mc"),
+                    F.lit(False).alias("__rm"),
                 )
+            )
+        probes = [g["probe"] for g in groups.values() if "probe" in g]
+        staged: dict = {}  # pid -> (new file names, dv_updates)
+        counts = {"updated": 0, "deleted": 0, "inserted": 0, "deleted_by_source": 0}
+        staging = Path(self.root) / "_staging" / f"merge_{uuid.uuid4().hex[:12]}"
+        try:
+            missing = 0
+            if narrow:
+                # one shuffle by construction: the window's partitioning
+                # satisfies the aggregate's clustered distribution
+                # (subset of its grouping keys) — see _dml_matched_counts
+                win = Window.partitionBy(PARTITION_COL, "__dv_name", "__rm")
+                rn = F.row_number().over(win.orderBy("__dv_pos"))
+                for r in (
+                    union(narrow)
+                    .withColumn("__rn", rn)
+                    .groupBy(PARTITION_COL, "__dv_name", *key_cols, "__mc", "__rm")
+                    .agg(
+                        F.count(F.lit(1)).alias("m"),
+                        F.collect_list(
+                            F.when(
+                                F.col("__rm")
+                                & (F.col("__rn") <= self.DV_INLINE_POSITIONS),
+                                F.col("__dv_pos"),
+                            )
+                        ).alias("pos"),
+                    )
+                    .collect()
+                ):
+                    if r["__mc"] == -2:
+                        missing += int(r["m"])
+                        continue
+                    s = st[r[PARTITION_COL]]
+                    if r["__mc"] != -1:
+                        s["present"].add(tuple(r[c] for c in key_cols))
+                    if r["__rm"]:
+                        n, c_ = r["__dv_name"], int(r["__mc"])
+                        s["match"][n] = s["match"].get(n, 0) + int(r["m"])
+                        s["clause"][c_] = s["clause"].get(c_, 0) + int(r["m"])
+                        s["inline"].setdefault(n, []).extend(int(x) for x in r["pos"])
+            if missing:
+                raise ValueError(
+                    f"merge_apply({table!r}): _source_stats misses {missing} "
+                    "source row(s) — the supplied stats must cover every "
+                    "(pid, key) pair of the source frame"
+                )
+            for pid, s in st.items():
+                ins, per_key = 0, {}
+                for k, mc_v, nmc_v, cnt in stats_by_pid[pid]:
+                    if k in s["present"]:
+                        if mc_v is not None:
+                            per_key[k] = per_key.get(k, 0) + cnt
+                    elif nmc_v is not None:
+                        ins += cnt
+                dup_key = next((k for k, n in per_key.items() if n > 1), None)
+                if dup_key is not None:
+                    raise ValueError(
+                        f"merge_apply({table!r}): multiple source rows match "
+                        f"target key {dup_key} with "
+                        "update/delete clauses — MERGE is ambiguous"
+                    )
+                s["ins"] = ins
+                s["lands"] = bool(ins or s["match"])
+                s["inline"] = {
+                    n: sorted(ps)
+                    for n, ps in s["inline"].items()
+                    if 0 < s["match"][n] <= self.DV_INLINE_POSITIONS
+                }
+                s["full"], s["dvf"], s["rewrite"] = [], [], []
+                if s["match"]:
+                    cands = sorted(set(s["cand_m"]) | set(s["cand_b"]))
+                    reader = groups[s["schema0"]]["reader"]
+                    live_cnt = self._dml_live_counts(
+                        lambda subset, pid=pid, reader=reader: live(reader, {pid: subset}),
+                        cands, s["m"].get("rows", {}), s["dv"],
+                    )
+                    s["full"], s["dvf"], s["rewrite"] = self._dml_dv_split(
+                        cands, s["match"], live_cnt, s["dv"], mode, extra_removed=set()
+                    )
+            # dense DV files (over the inline cap): one position job
+            # across every partition, then one sidecar per file
+            dense = {(p, n) for p, s in st.items() for n in s["dvf"] if n not in s["inline"]}
+            if dense:
+                names = sorted({n for _, n in dense})
+                for r in union([
+                    p_.filter(F.col("__rm") & F.col("__dv_name").isin(names))
+                    .select(PARTITION_COL, "__dv_name", "__dv_pos")
+                    for p_ in probes
+                ]).collect():
+                    pid, n = r[PARTITION_COL], r["__dv_name"]
+                    if (pid, n) in dense:
+                        st[pid]["inline"].setdefault(n, []).append(int(r["__dv_pos"]))
+            for pid, s in st.items():
+                dv_updates = {}
+                if s["dvf"]:
+                    dv_updates = self._dml_materialize_dvs(
+                        s["part"], None, s["dvf"], s["inline"], s["dv"],
+                        lambda n, s=s: self._dv_positions(s["part"], s["dv"][n]),
+                    )
+                staged[pid] = ([], dv_updates)
+            # successors: every superseded row's replacement plus the
+            # not-matched inserts, one write job per schema group
+            replace_idx = [i for i, c in enumerate(wm) if c["action"] == "update" and not c["set"]]
+            gated_idx = [i for i in replace_idx if wm[i].get("target_condition") is not None]
+            plain_idx = [i for i in replace_idx if i not in gated_idx]
+            for gi, g in enumerate(groups.values()):
+                lp = [p for p in g["pids"] if st[p]["lands"]]
+                if not lp:
+                    continue
+                src_g = src_l.filter(F.col(PARTITION_COL).isin(lp))
+                matched = g["probe"].filter("__rm").drop("__rm") if "probe" in g else None
+                present = [(p, *k) for p in lp for k in st[p]["present"]]
+                src_hit, src_un = None, src_g
+                if present:
+                    pres = F.broadcast(self._local_rows(present, key_schema))
+                    src_hit = src_g.join(pres, pk, "left_semi")
+                    src_un = src_g.join(pres, pk, "left_anti")
+                src_pieces = []
+                if src_hit is not None and plain_idx:
+                    src_pieces.append(src_hit.filter(F.col("__mc").isin(plain_idx)))
+                if src_hit is not None and gated_idx and matched is not None:
+                    # a gated replace lands its source successor ONLY
+                    # for keys with a passing target row — otherwise a
+                    # fenced-out (stale) update would still swap in
+                    passed = matched.filter(F.col("__mc").isin(gated_idx)).select(*pk, "__mc")
+                    src_pieces.append(
+                        src_hit.filter(F.col("__mc").isin(gated_idx))
+                        .join(F.broadcast(passed.distinct()), [*pk, "__mc"], "left_semi")
+                    )
+                if wnm:
+                    # insert counts come from the stats, not a count()
+                    # action: an Observation below repartitionByRange
+                    # fires twice (the range sampler re-runs its child)
+                    src_pieces.append(src_un.filter(F.col("__nmc").isNotNull()))
+                pieces = [p_.drop("__mc", "__nmc", *drops) for p_ in src_pieces]
+                for i, c in enumerate(wm):
+                    if matched is not None and c["action"] == "update" and c["set"]:
+                        pieces.append(
+                            matched.filter(F.col("__mc") == i)
+                            .drop("__dv_part", "__dv_name", "__dv_pos", "__mc")
+                            .withColumns({
+                                col: (e if isinstance(e, Column) else F.expr(str(e)))
+                                .cast(g["types"][col])
+                                for col, e in c["set"].items()
+                            })
+                        )
+                rw = {p: st[p]["rewrite"] for p in lp if st[p]["rewrite"]}
+                if rw:
+                    dv_keys = ["__dv_part", "__dv_name", "__dv_pos"]
+                    pieces.insert(0, live(g["reader"], rw).join(
+                        matched.select(*dv_keys), dv_keys, "left_anti"
+                    ).drop(*dv_keys))
+                if not pieces:
+                    continue
+                # range-clustered successors: one file per partition
+                # unless it rewrote several (then one per rewritten
+                # file, split by key range)
+                n_out = {p: max(1, len(st[p]["rewrite"])) for p in lp}
+                merged = union(pieces)
+                if max(n_out.values()) == 1:
+                    merged = merged.repartition(len(lp), PARTITION_COL)
+                else:
+                    merged = merged.repartitionByRange(sum(n_out.values()), *pk)
+                out = staging / f"g{gi}"
+                staging.mkdir(parents=True, exist_ok=True)
+                (staging / "_INFLIGHT").touch()
+                with self._inflight_keepalive(staging / "_INFLIGHT"):
+                    _rename_to_physical(merged.sortWithinPartitions(*pk), colmap).write \
+                        .partitionBy(PARTITION_COL).parquet(str(out))
+                by_dir = {f"{PARTITION_COL}={p}": p for p in lp}
+                for d in out.glob(f"{PARTITION_COL}=*"):
+                    pid = by_dir[unquote(d.name)]
+                    for f in sorted(d.glob("*.parquet")):
+                        name = f"merge-{uuid.uuid4().hex}.parquet"
+                        f.rename(st[pid]["part"] / name)
+                        staged[pid][0].append(name)
+        except BaseException:
+            for pid, (names, dv_updates) in staged.items():
+                self._merge_unstage(st[pid]["part"], names, dv_updates)
+            raise
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+            for p_ in probes:
+                p_.unpersist()
+        new_files = [st[p]["part"] / n for p, (ns, _) in staged.items() for n in ns]
+        try:
+            self._enforce_constraints(tdir.name, new_files, colmap)
+        except ConstraintViolation:
+            for pid, (names, dv_updates) in staged.items():
+                self._merge_unstage(st[pid]["part"], names, dv_updates)
+            raise
+        aborted: list = []
+        with self._exclusive_lock():
+            for pid, s in st.items():
+                names, dv_updates = staged[pid]
+                if not s["lands"] and groups[s["schema0"]]["schema"] == s["schema0"]:
+                    # provably NOTHING lands here — every probed key
+                    # absent or fenced by a target_condition, no insert,
+                    # no by-source delete — and the declared schema is
+                    # unchanged: no write, no manifest version. When the
+                    # clauses DO evolve the schema, the swap commits the
+                    # new schema alone, with no data file.
+                    continue
+                removed = set(s["rewrite"]) | set(s["full"])
+                s.update(
+                    new_names=names, dv_updates=dv_updates, removed=removed,
+                    touched=removed | set(dv_updates), evolves=evolves,
+                    payload_schema=payload.schema, colmap=colmap, wbs=bool(wbs),
+                    new_schema=groups[s["schema0"]]["schema"],
+                )
+                if self._merge_apply_swap(pid, s) is None:
+                    self._merge_unstage(s["part"], names, dv_updates)
+                    aborted.append(pid)
+                    continue
+                for i, c in enumerate(wm):
+                    k = "updated" if c["action"] == "update" else "deleted"
+                    counts[k] += s["clause"].get(i, 0)
+                counts["deleted_by_source"] += s["clause"].get(-1, 0)
+                counts["inserted"] += s["ins"]
+        return counts, aborted, fallback
 
-            committed = self._update_manifest(part, swap)
-        if committed is None:
-            for n in new_names:
-                (part / n).unlink(missing_ok=True)
-            for e in dv_updates.values():
-                (part / e["sidecar"]).unlink(missing_ok=True)
-            return None
-        return counts
+    @staticmethod
+    def _merge_unstage(part: Path, names: list[str], dv_updates: dict) -> None:
+        """Remove one partition's staged merge files and sidecars."""
+        for n in names:
+            (part / n).unlink(missing_ok=True)
+        for e in dv_updates.values():
+            (part / e["sidecar"]).unlink(missing_ok=True)
+
+    def _merge_apply_swap(self, pid, s: dict) -> dict | None:
+        """One partition's manifest swap for ``_merge_apply_batch``
+        (``s`` is that partition's pass state). Returns the committed
+        body, or None when the swap aborted under a concurrent writer.
+
+        Rewrite-conflict rules (compact's plus Iceberg's MERGE
+        validation): abort if a touched source was superseded by a
+        concurrent replace or its DV moved under a concurrent delete —
+        committing would resurrect superseded/deleted rows. A
+        concurrent append survives by reference only when its stats
+        prove it holds no source key (else one row per key could
+        break) AND no by-source candidate row."""
+        snapshot_files, snapshot_dv = set(s["m"]["files"]), s["dv"]
+
+        def swap(prior):
+            if prior is None or not s["touched"] <= set(prior["files"]):
+                return None
+            prior_dv = prior.get("dv") or {}
+            for n in s["touched"]:
+                if (prior_dv.get(n) or {}).get("sidecar") != (
+                    snapshot_dv.get(n) or {}
+                ).get("sidecar"):
+                    return None
+            prior_stats = prior.get("stats", {})
+            for n in prior["files"]:
+                if n in snapshot_files:
+                    continue
+                if s["key_where"] and _file_may_match(
+                    prior_stats.get(n), s["key_where"]
+                ):
+                    return None
+                if s["wbs"]:
+                    return None  # any unseen append may hold by-source rows
+            keep = [n for n in prior["files"] if n not in s["removed"]]
+            prior_schema = prior.get("schema")
+            if s["evolves"] and prior_schema and prior_schema != s["new_schema"]:
+                declared = _merge_schemas(
+                    _schema_from_json(prior_schema), s["payload_schema"]
+                ).json()
+            elif s["evolves"]:
+                declared = s["new_schema"]
+            else:
+                declared = prior_schema or s["new_schema"]
+            return self._build_manifest_body(
+                s["part"],
+                sorted(s["new_names"]) + keep,
+                prior_stats=prior.get("stats"),
+                schema_json=declared,
+                prior_rows=prior.get("rows"),
+                product_seq=prior.get("product_seq"),
+                dv={**prior_dv, **s["dv_updates"]},
+                colmap={**(prior.get("colmap") or {}), **s["colmap"]},
+                dropped_physical=prior.get("dropped_physical"),
+            )
+
+        return self._update_manifest(s["part"], swap)
+
 
     def _merge_apply_fallback(
         self,

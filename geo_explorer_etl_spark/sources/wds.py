@@ -83,7 +83,13 @@ class WdsClient:
 
     # -- S3 ---------------------------------------------------------------
     def cube_metadata(self, product_id: int) -> DataFrame:
-        """POST getCubeMetadata -> one-row nested DataFrame."""
+        """POST getCubeMetadata -> one-row nested DataFrame, built
+        through Arrow so it plans as a JVM ``LocalTableScan``: a
+        tuple-built frame plans as a Python-RDD scan, and every job
+        that broadcasts it starts Python workers."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         body = self.fetcher(
             f"{self.base_url}/getCubeMetadata", [{"productId": product_id}]
         )
@@ -99,25 +105,26 @@ class WdsClient:
             "subjectCode": obj.get("subjectCode") or [],
             "surveyCode": obj.get("surveyCode") or [],
             "dimension": [
-                (
-                    int(d["dimensionPositionId"]),
-                    d.get("dimensionNameEn"),
-                    d.get("dimensionNameFr"),
-                    bool(d.get("hasUom", False)),
-                    [
-                        (
-                            int(m["memberId"]),
-                            m.get("memberNameEn"),
-                            m.get("memberNameFr"),
-                            m.get("memberUomCode"),
-                        )
+                {
+                    "dimensionPositionId": int(d["dimensionPositionId"]),
+                    "dimensionNameEn": d.get("dimensionNameEn"),
+                    "dimensionNameFr": d.get("dimensionNameFr"),
+                    "hasUom": bool(d.get("hasUom", False)),
+                    "member": [
+                        {
+                            "memberId": int(m["memberId"]),
+                            "memberNameEn": m.get("memberNameEn"),
+                            "memberNameFr": m.get("memberNameFr"),
+                            "memberUomCode": m.get("memberUomCode"),
+                        }
                         for m in d.get("member", [])
                     ],
-                )
+                }
                 for d in obj.get("dimension", [])
             ],
         }
-        return self.spark.createDataFrame([row], METADATA_SCHEMA)
+        table = pa.Table.from_pylist([row], schema=to_arrow_schema(METADATA_SCHEMA))
+        return self.spark.createDataFrame(table, METADATA_SCHEMA)
 
     # -- S4 ---------------------------------------------------------------
     def code_sets(self) -> dict[str, DataFrame]:

@@ -410,7 +410,6 @@ def test_interior_delete_stays_invertible(spark, tmp_path):
     assert _view(store) == _expected(store)
 
 
-@pytest.mark.slow
 def test_randomized_refresh_differential(spark, tmp_path):
     """Seeded randomized differential (the merge_apply rule): random
     append/delete/update DML over the base, a refresh after every
@@ -1057,7 +1056,6 @@ def _pctl_expected(store):
     }
 
 
-@pytest.mark.slow
 def test_percentile_matview_differential(spark, tmp_path):
     """Randomized DML rounds over a PURE-percentile view: the view
     must equal the independent estimator over the base's current

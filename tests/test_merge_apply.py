@@ -512,13 +512,12 @@ def test_merge_apply_randomized_differential_vs_model(spark, tmp_path):
         assert got == model, f"round {round_no}"
 
 
-@pytest.mark.slow
 def test_merge_apply_multi_product_cdc_batch_pooled(spark, tmp_path):
-    """VERDICT r11 wrong #1: a multi-product CDC batch routes through
-    the pooled per-partition runner (more products than
-    DELETE_PARALLELISM driver threads) and still lands atomically per
-    partition — every product's clause effects correct, totals exact,
-    manifests referencing only existing files."""
+    """VERDICT r11 wrong #1: a multi-product CDC batch (more products
+    than DELETE_PARALLELISM) goes through the one batched pass and
+    still lands atomically per partition — every product's clause
+    effects correct, totals exact, manifests referencing only existing
+    files."""
     store = TableStore(spark, str(tmp_path / "wh"))
     n_pids = TableStore.DELETE_PARALLELISM + 3
     rows = [
@@ -574,7 +573,7 @@ def test_merge_apply_multi_product_cdc_batch_pooled(spark, tmp_path):
         exp[(pid, 3)] = ("live", 10.0 * pid + 3)
         exp[(pid, 9)] = ("new", -1.0)
     assert got == exp
-    # per-partition manifests are intact after the pooled swaps
+    # per-partition manifests are intact after the batched swaps
     for pid in range(1, n_pids + 1):
         part = Path(store.root) / "IndicatorValues" / f"{PARTITION_COL}={pid}"
         m = store._manifest(part)
@@ -583,8 +582,9 @@ def test_merge_apply_multi_product_cdc_batch_pooled(spark, tmp_path):
 
 def test_merge_apply_pooled_conflict_retry_per_product(spark, tmp_path):
     """An aborted swap (concurrent-replace conflict) on SOME products
-    must retry independently inside the pool without disturbing the
-    others: first attempt on every odd pid is forced to abort."""
+    reruns the batched pass for exactly those products without
+    disturbing the others: the first swap on every odd pid is forced
+    to abort."""
     store = TableStore(spark, str(tmp_path / "wh"), backend="cas")
     n_pids = 6
     base = spark.createDataFrame(
@@ -595,24 +595,22 @@ def test_merge_apply_pooled_conflict_retry_per_product(spark, tmp_path):
         store.replace_product_all(
             pid, {"IndicatorValues": base.filter(F.col(PARTITION_COL) == pid)}
         )
-    real = store._merge_apply_partition
+    real = store._merge_apply_swap
     import threading
 
     aborted = set()
     lock = threading.Lock()
 
-    def flaky(table, src, key_cols, wm, wnm, wbs, pid, probe_vals, mode, drops,
-              key_stats=None):
+    def flaky(pid, state):
         with lock:
             first = pid % 2 == 1 and pid not in aborted
             if first:
                 aborted.add(pid)
         if first:
             return None  # simulate a swap aborted under concurrent replace
-        return real(table, src, key_cols, wm, wnm, wbs, pid, probe_vals, mode,
-                    drops, key_stats)
+        return real(pid, state)
 
-    store._merge_apply_partition = flaky
+    store._merge_apply_swap = flaky
     try:
         counts = store.merge_apply(
             "IndicatorValues",
@@ -624,7 +622,7 @@ def test_merge_apply_pooled_conflict_retry_per_product(spark, tmp_path):
             when_matched=[{"condition": None, "action": "delete"}],
         )
     finally:
-        store._merge_apply_partition = real
+        store._merge_apply_swap = real
     assert aborted == {1, 3, 5}
     assert counts["deleted"] == n_pids
     left = store.read("IndicatorValues").groupBy(PARTITION_COL).count().collect()
@@ -634,7 +632,7 @@ def test_merge_apply_pooled_conflict_retry_per_product(spark, tmp_path):
 
 
 def test_merge_rows_multi_product_upsert_pooled(spark, tmp_path):
-    """merge_rows' upsert loop shares the pooled runner: a batch
+    """merge_rows' upsert shares merge_apply's batched pass: a batch
     touching many products upserts each partition correctly."""
     store = TableStore(spark, str(tmp_path / "wh"))
     n_pids = TableStore.DELETE_PARALLELISM + 2
@@ -758,3 +756,121 @@ def test_target_condition_rejected_off_matched_legs(spark, tmp_path):
             when_matched=[{"action": "update"}],
             when_not_matched_by_source=[{"target_condition": "amount > 0"}],
         )
+
+
+def _jobs_of(spark, group: str, fn):
+    """Run ``fn`` under a fresh job group; return how many Spark jobs
+    it submitted, by the status tracker's job ids for the group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_apply_job_count_flat_in_partition_count(spark, tmp_path):
+    """One pass over every touched partition: a merge over 8 product
+    partitions submits no more Spark jobs than the same merge over 1
+    partition plus a small constant (it was one probe → write → swap
+    chain per partition)."""
+
+    def run(n_pids: int) -> tuple[int, dict]:
+        store = TableStore(spark, str(tmp_path / f"wh{n_pids}"))
+        base = spark.createDataFrame(
+            [(pid, k, "live", float(k)) for pid in range(1, n_pids + 1) for k in range(20)],
+            f"{PARTITION_COL} LONG, k LONG, status STRING, amount DOUBLE",
+        )
+        for pid in range(1, n_pids + 1):
+            store.replace_product_all(
+                pid, {"IndicatorValues": base.filter(F.col(PARTITION_COL) == pid).coalesce(1)}
+            )
+        src = spark.createDataFrame(
+            [
+                (pid, k, op, "new", -1.0)
+                for pid in range(1, n_pids + 1)
+                for k, op in ((0, "D"), (1, "R"), (2, "S"), (50, "I"))
+            ],
+            f"{PARTITION_COL} LONG, k LONG, op STRING, status STRING, amount DOUBLE",
+        )
+        out: dict = {}
+
+        def merge():
+            out.update(
+                store.merge_apply(
+                    "IndicatorValues",
+                    src,
+                    ["k"],
+                    when_matched=[
+                        {"condition": "op = 'D'", "action": "delete"},
+                        {"condition": "op = 'R'", "action": "update"},
+                        {"condition": "op = 'S'", "action": "update",
+                         "set": {"amount": "amount + 100"}},
+                    ],
+                    when_not_matched=[{"condition": "op = 'I'"}],
+                    drop_cols=["op"],
+                )
+            )
+
+        jobs = _jobs_of(spark, f"merge-jobs-{n_pids}-{tmp_path.name}", merge)
+        assert store.read("IndicatorValues").count() == n_pids * 20
+        return jobs, out
+
+    run(1)  # warm-up: first-call planning must not skew either side
+    one, c1 = run(1)
+    eight, c8 = run(8)
+    assert c1 == {"updated": 2, "deleted": 1, "inserted": 1, "deleted_by_source": 0}
+    assert c8 == {k: 8 * v for k, v in c1.items()}
+    assert eight <= one + 2, (one, eight)
+
+
+def test_source_stats_that_miss_source_keys_raise_before_staging(spark, tmp_path):
+    """merge_apply's private ``_source_stats`` must cover every source
+    (pid, key) pair; the probe job counts the rows it misses and a
+    non-zero count raises before anything is staged or committed."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    base = spark.createDataFrame(
+        [(pid, k, "live", float(k)) for pid in (1, 2) for k in range(4)],
+        f"{PARTITION_COL} LONG, k LONG, status STRING, amount DOUBLE",
+    )
+    for pid in (1, 2):
+        store.replace_product_all(
+            pid, {"IndicatorValues": base.filter(F.col(PARTITION_COL) == pid)}
+        )
+    root = Path(store.root) / "IndicatorValues"
+
+    def state():
+        # data files, sidecars, manifests and the history journal
+        return sorted(str(p.relative_to(root)) for p in root.rglob("*") if p.is_file())
+
+    before = state()
+    src = spark.createDataFrame(
+        [(1, 0, "x", 9.0), (1, 9, "x", 9.0), (2, 1, "x", 9.0)],
+        f"{PARTITION_COL} LONG, k LONG, status STRING, amount DOUBLE",
+    ).cache()
+    # under-reports: (1, 9) and all of product 2 are missing
+    stats = [(1, {"k": 0}, 0, 0, 1)]
+    with pytest.raises(ValueError, match="_source_stats misses 2 source row"):
+        store.merge_apply(
+            "IndicatorValues",
+            src,
+            ["k"],
+            when_matched=[{"action": "update"}],
+            when_not_matched=[{}],
+            _source_stats=stats,
+        )
+    assert state() == before
+    assert sorted(
+        (r[PARTITION_COL], r.k, r.status) for r in store.read("IndicatorValues").collect()
+    ) == [(pid, k, "live") for pid in (1, 2) for k in range(4)]
+    # the complete stats commit normally
+    full = stats + [(1, {"k": 9}, 0, 0, 1), (2, {"k": 1}, 0, 0, 1)]
+    counts = store.merge_apply(
+        "IndicatorValues", src, ["k"],
+        when_matched=[{"action": "update"}], when_not_matched=[{}],
+        _source_stats=full,
+    )
+    assert counts == {"updated": 2, "deleted": 0, "inserted": 1, "deleted_by_source": 0}

@@ -4263,3 +4263,49 @@ def test_dv_mask_filter_gates_on_file_count(spark, tmp_path):
     store2.DV_FILTER_MAX_FILES = 10_000  # force the literal-filter form
     filtered = {r["k"] for r in store2.read("T").collect()}
     assert joined == filtered == set(range(200)) - set(range(0, 200, 25))
+
+
+def test_cube_metadata_arrow_frame_matches_tuple_frame(spark):
+    """getCubeMetadata's one-row nested frame is built through Arrow:
+    it plans as a LocalTableScan (no Python-RDD scan whose broadcasts
+    start Python workers) and collects exactly what the tuple-built
+    frame does, nulls and empty arrays included."""
+    from geo_explorer_etl_spark.sources.wds import METADATA_SCHEMA, WdsClient
+
+    obj = {
+        "productId": "98100001",
+        "cubeTitleEn": "Population",
+        "cubeTitleFr": None,
+        "cubeEndDate": "2021-01-01",
+        "releaseTime": None,
+        "surveyCode": ["3901"],
+        "dimension": [
+            {
+                "dimensionPositionId": 1,
+                "dimensionNameEn": "Geography",
+                "member": [
+                    {"memberId": 1, "memberNameEn": "Canada", "memberUomCode": 223},
+                    {"memberId": 2, "memberNameEn": None, "memberNameFr": "Québec"},
+                ],
+            },
+            {"dimensionPositionId": 2, "dimensionNameFr": "Sexe", "hasUom": True},
+        ],
+    }
+    df = WdsClient(spark, fetcher=lambda url, payload=None: {"status": "SUCCESS", "object": obj}).cube_metadata(98100001)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+    expected = spark.createDataFrame(
+        [
+            (
+                98100001, "Population", None, None, "2021-01-01", 12, None, [], ["3901"],
+                [
+                    (1, "Geography", None, False,
+                     [(1, "Canada", None, 223), (2, None, "Québec", None)]),
+                    (2, None, "Sexe", True, []),
+                ],
+            )
+        ],
+        METADATA_SCHEMA,
+    )
+    assert df.schema == METADATA_SCHEMA
+    assert df.collect() == expected.collect()
