@@ -133,7 +133,6 @@ def test_merged_sibling_reuses_master_indicators(merged_env):
     assert meta_pids == {PID}
 
 
-@pytest.mark.slow
 def test_sql_frontend_matches_dataframe_view(spark, tmp_path):
     """register_star_views + sql_primary_query produce the same rows
     as the DataFrame-API primary_query over the same warehouse."""

@@ -4265,6 +4265,76 @@ def test_dv_mask_filter_gates_on_file_count(spark, tmp_path):
     assert joined == filtered == set(range(200)) - set(range(0, 200, 25))
 
 
+def test_dv_mask_expression_filter_matches_probe_join(spark, tmp_path):
+    """The literal DV mask is one SQL expression (one py4j call, quoted
+    names escaped). read(), read_at() and read_changes() — whose
+    slices carry both 'exclude' and 'only' masks — return the same rows
+    through it as through the broadcast-probe join, over a 1-position
+    mask and a 300-position mask on two files."""
+    import time
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from geo_explorer_etl_spark.sources.store import PARTITION_COL, TableStore, _sql_str
+
+    root = str(tmp_path / "store")
+    store = TableStore(spark, root)
+    def rng(lo, hi):
+        return (
+            spark.range(lo, hi, numPartitions=1)
+            .select(F.col("id").alias("k"), (F.col("id") * 3).alias("v"))
+            .withColumn(PARTITION_COL, F.lit(1).cast("long"))
+        )
+
+    store.replace_product_all(1, {"T": rng(0, 400)})
+    store.append("T", rng(400, 800))
+    store.append("T", rng(800, 1200))  # three files of 400 rows
+    t0 = time.time()
+    time.sleep(0.02)
+    store.delete_where("T", [("k", "==", 5)], mode="dv")
+    store.delete_where("T", [("k", "between", (400, 699))], mode="dv")
+    part = tmp_path / "store" / "T" / f"{PARTITION_COL}=1"
+    sizes = sorted(len(store._dv_positions(part, e)) for e in store._manifest(part)["dv"].values())
+    assert sizes == [1, 300]
+    time.sleep(0.02)
+    t_masked = time.time()
+    time.sleep(0.02)
+    # rewriting the 1-position file gives read_changes an 'exclude'
+    # slice (the superseded file's rows under its mask)
+    store.update_where("T", {"v": "v + 1"}, [("k", "==", 10)], mode="cow")
+
+    def rows(s):
+        def norm(frame):
+            return sorted(tuple(r) for r in frame.collect())
+
+        return (
+            norm(s.read("T")),
+            norm(s.read_at("T", t_masked)),
+            norm(s.read_changes("T", since=t0)),
+        )
+
+    expr_store = TableStore(spark, root)
+
+    def no_probe(triples):
+        raise AssertionError("the expression filter should serve these masks")
+
+    expr_store._dv_probe = no_probe
+    probe_store = TableStore(spark, root)
+    probe_store.DV_FILTER_MAX_POSITIONS = 0  # force the broadcast-probe path
+    got, want = rows(expr_store), rows(probe_store)
+    assert got == want
+    live = {r[0] for r in got[0]}
+    assert live == set(range(1200)) - {5} - set(range(400, 700))
+    # the DV deltas ('only' slices), then the rewrite's 399 live rows
+    # out ('exclude' slice) and back in
+    kinds = Counter(r["_change_type"] for r in expr_store.read_changes("T", since=t0).collect())
+    assert kinds == {"delete": 301 + 399, "insert": 399}
+    # the quoting the expression applies to partition and file names
+    odd = "IndicatorThemeId=1'x\\y"
+    assert spark.sql(f"SELECT {_sql_str(odd)} AS s").first().s == odd
+
+
 def test_cube_metadata_arrow_frame_matches_tuple_frame(spark):
     """getCubeMetadata's one-row nested frame is built through Arrow:
     it plans as a LocalTableScan (no Python-RDD scan whose broadcasts

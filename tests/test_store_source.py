@@ -211,9 +211,11 @@ def test_sentinel_survives_optimizer_and_file_col_is_dropped(spark, tmp_path):
 
 
 def test_register_star_views_is_query_time_fresh(spark, tmp_path):
-    """register_star_views (the SQL front-end) now serves through the
-    batch source: the registered view reflects an update_where with no
-    re-registration — the exact stale-view trap VERDICT r10 named."""
+    """register_star_views (the SQL front-end): the registered native
+    view reflects a delete_where through the registering handle with
+    no re-registration — the exact stale-view trap VERDICT r10 named —
+    and a later snapshot=True registration drops the re-binding hook,
+    so its views stay pinned."""
     from geo_explorer_etl_spark.plans.sql_views import register_star_views
 
     root = str(tmp_path / "wh")
@@ -230,6 +232,106 @@ def test_register_star_views_is_query_time_fresh(spark, tmp_path):
     store.delete_where("IndicatorValues", [("IndicatorValueId", "==", 1050)])
     pinned = spark.sql("SELECT count(*) c FROM IndicatorValues").collect()[0].c
     assert pinned == 90
+
+
+def _publish_star(spark, root):
+    """A one-indicator star: 6 values at 6 geographies, 2 levels."""
+    store = TableStore(spark, root)
+
+    def frame(rows, ddl):
+        return spark.createDataFrame(rows, ddl).withColumn(PARTITION_COL, F.lit(1).cast("long"))
+
+    store.replace_product_all(1, {
+        "Indicators": frame([(1, "Pop", "Pop")], "IndicatorId LONG, IndicatorName_EN STRING, IndicatorName_FR STRING"),
+        "IndicatorValues": frame([(100 + g, float(g), None) for g in range(6)],
+                                 "IndicatorValueId LONG, Value DOUBLE, NullReasonId INT"),
+        "GeographyReferenceForIndicator": frame(
+            [(f"G{g}", 1, 100 + g) for g in range(6)],
+            "GeographyReferenceId STRING, IndicatorId LONG, IndicatorValueId LONG"),
+        "GeographicLevelForIndicator": frame([(1, "L0"), (1, "L1")], "IndicatorId LONG, GeographicLevelId STRING"),
+        "RelatedCharts": frame([(1, "1")], "IndicatorId LONG, RelatedIndicatorIds STRING"),
+    })
+    spark.createDataFrame(
+        [(f"G{g}", f"Geo {g}", f"Geo {g}", f"L{g % 2}", "shape") for g in range(6)],
+        "GeographyReferenceId STRING, DisplayNameShort_EN STRING, DisplayNameShort_FR STRING, "
+        "GeographicLevelId STRING, Shape STRING",
+    ).createOrReplaceTempView("GeographyReference")
+    spark.createDataFrame(
+        [("L0", "Country", "Pays"), ("L1", "Province", "Province")],
+        "GeographicLevelId STRING, LevelName_EN STRING, LevelName_FR STRING",
+    ).createOrReplaceTempView("GeographicLevel")
+    spark.createDataFrame([(1, "..")], "NullReasonId INT, Symbol STRING").createOrReplaceTempView(
+        "IndicatorNullReason")
+    return store
+
+
+def test_star_views_rebind_on_other_handle_commit_and_survive_vacuum(spark, tmp_path):
+    """The native star views: a commit through a SECOND handle on the
+    same root is seen by the next sql_primary_query with no
+    re-registration (the query re-binds the tables whose committed
+    versions moved, and only those); with nothing changed the query
+    re-binds nothing and submits no Spark job; and a vacuum after DML
+    through the registering handle leaves the views readable."""
+    from geo_explorer_etl_spark.plans.sql_views import register_star_views, sql_primary_query
+
+    root = str(tmp_path / "wh")
+    store = _publish_star(spark, root)
+    register_star_views(spark, store)
+
+    def served():
+        return sorted((r.GeographyReferenceId, r.Value) for r in sql_primary_query(spark, 1).collect())
+
+    assert served() == [(f"G{g}", float(g)) for g in range(6)]
+    reads = []
+    real_read = store.read
+    store.read = lambda t, *a, **kw: reads.append(t) or real_read(t, *a, **kw)
+    sc = spark.sparkContext
+    sc.setJobGroup("star-rebind-check", "re-bind check")
+    try:
+        sql_primary_query(spark, 1)
+    finally:
+        sc.setJobGroup("", "")
+    assert reads == []
+    assert list(sc.statusTracker().getJobIdsForGroup("star-rebind-check")) == []
+
+    other = TableStore(spark, root)
+    other.delete_where("IndicatorValues", [("IndicatorValueId", "==", 102)])
+    assert served() == [(f"G{g}", float(g)) for g in range(6) if g != 2]
+    assert reads == ["IndicatorValues"]
+
+    # DML through the registering handle re-binds on commit; vacuum
+    # then removes the superseded files the earlier bindings scanned
+    store.update_where("IndicatorValues", {"Value": "Value + 10"}, [("IndicatorValueId", "==", 101)], mode="cow")
+    store.delete_where("IndicatorValues", [("IndicatorValueId", "==", 103)], mode="cow")
+    assert store.vacuum(older_than_seconds=0) > 0
+    want = [("G0", 0.0), ("G1", 11.0), ("G4", 4.0), ("G5", 5.0)]
+    assert served() == want
+    assert spark.sql("SELECT count(*) c FROM IndicatorValues").first().c == 4
+    store.read = real_read
+
+
+def test_generated_queries_bind_parameters_and_refuse_unknown_locales(spark, tmp_path):
+    """indicator_id and dguid are bound parameters: a DGUID carrying a
+    quote matches nothing and injects nothing. The locale names
+    columns, so anything but EN/FR is refused before it reaches the
+    SQL text."""
+    from geo_explorer_etl_spark.plans.sql_views import (
+        register_star_views,
+        sql_primary_query,
+        sql_related_charts_query,
+    )
+
+    register_star_views(spark, _publish_star(spark, str(tmp_path / "wh")))
+    assert len(sql_related_charts_query(spark, 1, "G3").collect()) == 1
+    assert sql_related_charts_query(spark, 1, "G3' OR '1'='1").collect() == []
+    assert sql_related_charts_query(spark, 1, "x' --").collect() == []
+    assert [r.IndicatorName for r in sql_related_charts_query(spark, 1, "G3", locale="fr").collect()] == ["Pop"]
+    assert len(sql_primary_query(spark, 1, locale="FR").collect()) == 6
+    for bad in ("XX", "EN, 1 AS x", ""):
+        with pytest.raises(ValueError, match="locale"):
+            sql_primary_query(spark, 1, locale=bad)
+        with pytest.raises(ValueError, match="locale"):
+            sql_related_charts_query(spark, 1, "G3", locale=bad)
 
 
 def test_source_errors_on_missing_table_and_missing_dv_positions(spark, tmp_path):
