@@ -310,6 +310,64 @@ def test_star_views_rebind_on_other_handle_commit_and_survive_vacuum(spark, tmp_
     store.read = real_read
 
 
+def test_concurrent_rebinds_never_leave_an_older_snapshot_bound(spark, tmp_path):
+    """Two query-time re-binds race across a commit from another handle:
+    A plans the older snapshot, B the newer one, and A's view lands
+    between B's view and B's bookkeeping. Unserialized, that leaves
+    A's older scan bound under B's newer state, which no later check
+    would notice; serialized, B waits for A and then re-binds."""
+    import threading
+
+    from geo_explorer_etl_spark.plans import sql_views
+
+    root = str(tmp_path / "wh")
+    store = _publish_star(spark, root)
+    sql_views.register_star_views(spark, store)
+    binding = sql_views._BINDINGS[spark]
+    other = TableStore(spark, root)
+    a_reading, a_go, b_replaced, b_go = (threading.Event() for _ in range(4))
+    real_read = store.read
+
+    class Paused:
+        def __init__(self, df):
+            self.df = df
+
+        def createOrReplaceTempView(self, name):
+            self.df.createOrReplaceTempView(name)
+            if threading.current_thread().name == "B":
+                b_replaced.set()
+                b_go.wait(60)
+
+    def read(t, *a, **kw):
+        df = real_read(t, *a, **kw)
+        if threading.current_thread().name == "A":
+            a_reading.set()
+            a_go.wait(60)
+        return Paused(df)
+
+    store.read = read
+    other.delete_where("IndicatorValues", [("IndicatorValueId", "==", 100)])
+    a = threading.Thread(target=binding.refresh, args=(["IndicatorValues"],), name="A")
+    b = threading.Thread(target=binding.refresh, args=(["IndicatorValues"],), name="B")
+    try:
+        a.start()
+        assert a_reading.wait(60)
+        other.delete_where("IndicatorValues", [("IndicatorValueId", "==", 101)])
+        b.start()
+        b_replaced.wait(2)  # reached only when B does not wait for A
+        a_go.set()
+        a.join(60)
+        b_go.set()
+        b.join(60)
+    finally:
+        a_go.set()
+        b_go.set()
+        store.read = real_read
+    assert not a.is_alive() and not b.is_alive()
+    assert binding.bound["IndicatorValues"] == store.committed_state("IndicatorValues")
+    assert spark.sql("SELECT count(*) c FROM IndicatorValues").first().c == 4
+
+
 def test_generated_queries_bind_parameters_and_refuse_unknown_locales(spark, tmp_path):
     """indicator_id and dguid are bound parameters: a DGUID carrying a
     quote matches nothing and injects nothing. The locale names
